@@ -380,11 +380,12 @@ def decode_geometry_vec(
     Raises the same first-ring-clockwise DecodeError as the scalar path
     (the only error reachable from a canonical stream).
 
-    packed=True returns ("packed", {kind, xs, ys, offsets[, exterior]})
-    — flat coordinate arrays + part offsets, NO per-part Python objects.
-    This is the scale form: a feature with 168k parts (the reference's
-    multi_line bench tile) costs three arrays instead of 168k views,
-    and maps 1:1 onto Arrow list columns for the Spark decode scan."""
+    The decode builds one flat form — xs, ys and part offsets (plus the
+    exterior flag per polygon ring) — with NO per-part Python objects.
+    packed=True returns it as ("packed", {kind, xs, ys, offsets[,
+    exterior]}): the scale form the packed and gpack scans carry, which
+    maps 1:1 onto Arrow list columns. The default returns the part-list
+    geom tuple derived from it (`_parts_from_flat`)."""
     g = np.asarray(commands, dtype=np.uint64)
     n = len(g)
     if n == 0 or geom_type not in (POINT, LINESTRING, POLYGON):
@@ -512,26 +513,25 @@ def decode_geometry_vec(
     grp_of_blk = np.cumsum(is_mt_blk) - 1
     grp = grp_of_blk[part_id] if geom_type != POINT else part_id
 
-    if geom_type == POINT:
-        X = tile_x + pts[:, 0] / scale_x
-        Y = tile_y + pts[:, 1] / scale_y
+    def merc(p):  # px -> decoded space, as _scale_pt / _scale_pt_int
         if value_type == "int64":
-            X, Y = _round_half_away(pts[:, 0] / scale_x) + tile_x, _round_half_away(
-                pts[:, 1] / scale_y
-            ) + tile_y
+            return (tile_x + _round_half_away(p[:, 0] / scale_x),
+                    tile_y + _round_half_away(p[:, 1] / scale_y))
+        return tile_x + p[:, 0] / scale_x, tile_y + p[:, 1] / scale_y
+
+    if geom_type == POINT:
+        X, Y = merc(pts)
         if bbox is not None:
             m = (bbox[0] <= X) & (X <= bbox[2]) & (bbox[1] <= Y) & (Y <= bbox[3])
             X, Y = X[m], Y[m]
         if len(X) == 0:
             return ("empty", None)
-        if packed:
-            return ("packed", {
-                "kind": "multipoint",
-                "xs": X.astype(np.float64), "ys": Y.astype(np.float64),
-                "offsets": np.array([0, len(X)], dtype=np.int64),
-            })
-        arr = np.column_stack([X, Y]).astype(np.float64)
-        return ("point", arr[0]) if len(arr) == 1 else ("multipoint", arr)
+        flat = {
+            "kind": "multipoint",
+            "xs": X.astype(np.float64), "ys": Y.astype(np.float64),
+            "offsets": np.array([0, len(X)], dtype=np.int64),
+        }
+        return ("packed", flat) if packed else _parts_from_flat(flat)
 
     # skip-zero: zero LineTo deltas never append a vertex (line_next /
     # ring_next with skip_zero=True); MoveTo deltas always do
@@ -557,12 +557,7 @@ def decode_geometry_vec(
         kpts, kgrp, kcmd = kpts[dm], kgrp[dm], kcmd[dm]
         counts = np.bincount(kgrp, minlength=ngroups)
 
-    if value_type == "int64":
-        X = tile_x + _round_half_away(kpts[:, 0] / scale_x)
-        Y = tile_y + _round_half_away(kpts[:, 1] / scale_y)
-    else:
-        X = tile_x + kpts[:, 0] / scale_x
-        Y = tile_y + kpts[:, 1] / scale_y
+    X, Y = merc(kpts)
     starts = np.concatenate([[0], np.cumsum(counts)[:-1]]).astype(np.int64)
 
     if geom_type == LINESTRING:
@@ -578,35 +573,23 @@ def decode_geometry_vec(
             gi_keep = gi_keep[inb]
         if len(gi_keep) == 0:
             return ("empty", None)
-        if packed:
-            lens = counts[gi_keep]
-            if len(gi_keep) == ngroups and int(lens.sum()) == len(X):
-                xs, ys = X, Y  # nothing dropped: already contiguous
-            else:
-                base = np.repeat(starts[gi_keep], lens)
-                idx = base + (np.arange(int(lens.sum()), dtype=np.int64)
-                              - np.repeat(np.cumsum(lens) - lens, lens))
-                xs, ys = X[idx], Y[idx]
-            offsets = np.concatenate([[0], np.cumsum(lens)]).astype(np.int64)
-            return ("packed", {
-                "kind": "multilinestring",
-                "xs": xs.astype(np.float64), "ys": ys.astype(np.float64),
-                "offsets": offsets,
-            })
-        # parts are VIEWS into one (N,2) array — a 168k-segment feature
-        # (the reference's multi_line bench tile) costs one column_stack
-        # plus slice handles, not 168k small copies
-        XY = np.column_stack([X, Y])
-        lines = [
-            XY[starts[gi] : starts[gi] + counts[gi]] for gi in gi_keep
-        ]
-        if len(lines) == 1:
-            return ("linestring", lines[0]) if len(lines[0]) > 1 else ("empty", None)
-        return ("multilinestring", lines)
+        lens = counts[gi_keep]
+        if len(gi_keep) == ngroups and int(lens.sum()) == len(X):
+            xs, ys = X, Y  # nothing dropped: already contiguous
+        else:
+            base = np.repeat(starts[gi_keep], lens)
+            idx = base + (np.arange(int(lens.sum()), dtype=np.int64)
+                          - np.repeat(np.cumsum(lens) - lens, lens))
+            xs, ys = X[idx], Y[idx]
+        flat = {
+            "kind": "multilinestring",
+            "xs": xs.astype(np.float64), "ys": ys.astype(np.float64),
+            "offsets": np.concatenate([[0], np.cumsum(lens)]).astype(np.int64),
+        }
+        return ("packed", flat) if packed else _parts_from_flat(flat)
 
     # POLYGON — per-ring int shoelace (exact: |coord| <= 2^25), closing
-    # points inserted in ONE global scatter, then the scalar path's
-    # classification/assembly over ring views
+    # points inserted in ONE global scatter
     cross = kpts[:-1, 0] * kpts[1:, 1] - kpts[:-1, 1] * kpts[1:, 0]
     same = kgrp[:-1] == kgrp[1:]
     areas = np.bincount(kgrp[:-1][same], weights=cross[same].astype(np.float64),
@@ -633,102 +616,73 @@ def decode_geometry_vec(
     closers = np.flatnonzero(need)
     OUT[(out_starts + out_len - 1)[closers], 0] = X[a_arr[closers]]
     OUT[(out_starts + out_len - 1)[closers], 1] = Y[a_arr[closers]]
-    if bbox is not None and len(gi_all):
+
+    # ring classification (decoder.ipp:473-566): rings of <= 3 points
+    # are skipped; the first kept ring fixes the exterior winding (v2
+    # rejects it clockwise); an interior ring is kept only when it is in
+    # the box and the nearest preceding exterior was kept
+    valid = out_len > 3
+    vi = np.flatnonzero(valid)
+    if len(vi) == 0:
+        return ("empty", None)
+    cw = areas < 0.0
+    first_cw = bool(cw[vi[0]])
+    if version != 1 and first_cw:
+        raise DecodeError("POLYGON first ring clockwise (invalid in v2)")
+    ext = (cw == first_cw) & valid
+    if bbox is not None:
         mnx = np.minimum.reduceat(OUT[:, 0], out_starts)
         mxx = np.maximum.reduceat(OUT[:, 0], out_starts)
         mny = np.minimum.reduceat(OUT[:, 1], out_starts)
         mxy = np.maximum.reduceat(OUT[:, 1], out_starts)
-
-    if packed:
-        # vectorized twin of the classification loop below
-        valid = out_len > 3
-        vi = np.flatnonzero(valid)
-        if len(vi) == 0:
-            return ("empty", None)
-        cw = areas < 0.0
-        first_cw = bool(cw[vi[0]])
-        if version != 1 and first_cw:
-            raise DecodeError("POLYGON first ring clockwise (invalid in v2)")
-        ext = (cw == first_cw) & valid
-        if bbox is not None:
-            in_box = ~((mxx < bbox[0]) | (mnx > bbox[2])
-                       | (mxy < bbox[1]) | (mny > bbox[3]))
-        else:
-            in_box = np.ones(len(gi_all), dtype=bool)
-        ext_kept = ext & in_box
-        # interior rings attach to the nearest preceding exterior; they
-        # are kept only when that exterior was kept (the scalar loop's
-        # last_exterior_not_included), and dropped with no owner at all
-        has_owner = np.cumsum(ext) > 0
-        owner = np.maximum(np.cumsum(ext) - 1, 0)
-        owner_ord = np.cumsum(ext) - 1  # ordinal among exteriors
-        ext_kept_by_ord = ext_kept[np.flatnonzero(ext)] if ext.any() else np.zeros(0, bool)
-        keep_r = valid & np.where(
-            ext, ext_kept,
-            in_box & has_owner
-            & np.where(has_owner, ext_kept_by_ord[np.maximum(owner_ord, 0)], False),
-        )
-        ri = np.flatnonzero(keep_r)
-        if len(ri) == 0:
-            return ("empty", None)
-        lens = out_len[ri]
-        tot_o = int(lens.sum())
-        reverse_rings = ((scale_x * scale_y) < 0) != first_cw
-        off_in = np.repeat(np.cumsum(lens) - lens, lens)
-        pos_in = np.arange(tot_o, dtype=np.int64) - off_in
-        if reverse_rings:
-            idx = np.repeat(out_starts[ri] + lens - 1, lens) - pos_in
-        else:
-            idx = np.repeat(out_starts[ri], lens) + pos_in
-        return ("packed", {
-            "kind": "multipolygon",
-            "xs": OUT[idx, 0], "ys": OUT[idx, 1],
-            "offsets": np.concatenate([[0], np.cumsum(lens)]).astype(np.int64),
-            "exterior": ext[ri],
-        })
-
-    rings: list[np.ndarray] = []
-    rings_exterior: list[bool] = []
-    first_ring = True
-    first_ring_is_clockwise = False
-    last_exterior_not_included = False
-    for ri in range(len(gi_all)):
-        if out_len[ri] <= 3:
-            continue
-        area_cw = float(areas[ri]) < 0.0
-        if first_ring:
-            first_ring_is_clockwise = area_cw
-            if version != 1 and first_ring_is_clockwise:
-                raise DecodeError("POLYGON first ring clockwise (invalid in v2)")
-            first_ring = False
-        is_exterior = first_ring_is_clockwise == area_cw
-        in_box = True
-        if bbox is not None:
-            in_box = not (
-                mxx[ri] < bbox[0] or mnx[ri] > bbox[2]
-                or mxy[ri] < bbox[1] or mny[ri] > bbox[3]
-            )
-        if (not is_exterior and last_exterior_not_included) or not in_box:
-            if is_exterior:
-                last_exterior_not_included = True
-        else:
-            if is_exterior:
-                last_exterior_not_included = False
-            rings.append(OUT[out_starts[ri] : out_starts[ri] + out_len[ri]])
-            rings_exterior.append(is_exterior)
-    if not rings:
+        in_box = ~((mxx < bbox[0]) | (mnx > bbox[2])
+                   | (mxy < bbox[1]) | (mny > bbox[3]))
+    else:
+        in_box = np.ones(len(gi_all), dtype=bool)
+    ext_kept = ext & in_box
+    # owner = ordinal of the nearest preceding exterior (the first valid
+    # ring is an exterior, so every valid interior has one)
+    owner = np.maximum(np.cumsum(ext) - 1, 0)
+    keep_r = valid & np.where(ext, ext_kept, in_box & ext_kept[np.flatnonzero(ext)][owner])
+    ri = np.flatnonzero(keep_r)
+    if len(ri) == 0:
         return ("empty", None)
-    reverse_rings = ((scale_x * scale_y) < 0) != first_ring_is_clockwise
+    lens = out_len[ri]
+    reverse_rings = ((scale_x * scale_y) < 0) != first_cw
+    pos_in = np.arange(int(lens.sum()), dtype=np.int64) - np.repeat(np.cumsum(lens) - lens, lens)
+    if reverse_rings:
+        idx = np.repeat(out_starts[ri] + lens - 1, lens) - pos_in
+    else:
+        idx = np.repeat(out_starts[ri], lens) + pos_in
+    flat = {
+        "kind": "multipolygon",
+        "xs": OUT[idx, 0], "ys": OUT[idx, 1],
+        "offsets": np.concatenate([[0], np.cumsum(lens)]).astype(np.int64),
+        "exterior": ext[ri],
+    }
+    return ("packed", flat) if packed else _parts_from_flat(flat)
+
+
+def _parts_from_flat(flat: dict) -> tuple:
+    """Flat decode form -> the part-list geom tuple: parts are VIEWS
+    into one (N,2) array, so a 168k-part feature (the reference's
+    multi_line bench tile) costs one column_stack plus slice handles;
+    polygon rings group under the exterior that precedes them."""
+    xy = np.column_stack([flat["xs"], flat["ys"]])
+    kind = flat["kind"]
+    if kind == "multipoint":
+        return ("point", xy[0]) if len(xy) == 1 else ("multipoint", xy)
+    offs = flat["offsets"].tolist()
+    parts = [xy[a:b] for a, b in zip(offs, offs[1:])]
+    if kind == "multilinestring":
+        return ("linestring", parts[0]) if len(parts) == 1 else ("multilinestring", parts)
     polys: list[list[np.ndarray]] = []
-    for ring, is_ext in zip(rings, rings_exterior):
-        r = ring[::-1].copy() if reverse_rings else ring
+    for ring, is_ext in zip(parts, flat["exterior"].tolist()):
         if is_ext:
-            polys.append([r])
-        elif polys:
-            polys[-1].append(r)
-    if len(polys) == 1:
-        return ("polygon", polys[0])
-    return ("multipolygon", polys)
+            polys.append([ring])
+        else:
+            polys[-1].append(ring)
+    return ("polygon", polys[0]) if len(polys) == 1 else ("multipolygon", polys)
 
 
 def _round_half_away(v: np.ndarray) -> np.ndarray:

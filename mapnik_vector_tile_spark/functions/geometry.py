@@ -1464,14 +1464,6 @@ def _clip_polygon_rings(rings, box, area_threshold, process_all_rings):
 RESOLVE_VERTEX_BUDGET = 1_000_000
 
 
-def _segments_intersect(a0, a1, b0, b1) -> bool:
-    d1 = (b1[0] - b0[0]) * (a0[1] - b0[1]) - (b1[1] - b0[1]) * (a0[0] - b0[0])
-    d2 = (b1[0] - b0[0]) * (a1[1] - b0[1]) - (b1[1] - b0[1]) * (a1[0] - b0[0])
-    d3 = (a1[0] - a0[0]) * (b0[1] - a0[1]) - (a1[1] - a0[1]) * (b0[0] - a0[0])
-    d4 = (a1[0] - a0[0]) * (b1[1] - a0[1]) - (a1[1] - a0[1]) * (b1[0] - a0[0])
-    return ((d1 > 0) != (d2 > 0)) and ((d3 > 0) != (d4 > 0))
-
-
 def _needs_fill_resolution_scalar(rings) -> bool:
     """Pure-float small-case twin of the vectorized check below (numpy
     per-call overhead dominates for the typical 4-8 vertex tile ring)."""

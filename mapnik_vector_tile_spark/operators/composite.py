@@ -274,10 +274,7 @@ def merge_tiles_reencode_geom(
     from mapnik_vector_tile_spark.operators import decode as D
     from mapnik_vector_tile_spark.operators.encode import encode_geom_layer
 
-    first = D.decode_tiles_gpack(
-        tiles, keep_cols=[source_order_col], ordinals=True, typed=True,
-        with_raster=True,
-    )
+    first = D.decode_tiles_gpack(tiles, merge_col=source_order_col)
     cols = ["z", "x", "y", "tile", "n_features", "n_layers", "painted"]
 
     def kernel(key, pdf):

@@ -1,11 +1,27 @@
 """Tile decode — mapInPandas inverse of operators.encode (S2/S3, K6/K7).
 
-The reference's tile_datasource_pbf + tile_featureset_pbf pull model
+The reference decodes through one pull model: tile_datasource_pbf hands
+each layer to tile_featureset_pbf, which walks its features
 (src/vector_tile_datasource_pbf.ipp:35-194,
-src/vector_tile_featureset_pbf.ipp:113-325) becomes a batch kernel:
-tile binary -> feature rows with decoded mercator lon/lat (or WKT) and
-stringified properties. Used for round-trip verification and as the
-decode scan of composite's slow path.
+src/vector_tile_featureset_pbf.ipp:113-325). Here that is one core:
+
+- the tile walk `_tile_layers`: stored tile -> (layer index, layer
+  bytes, tile mercator bounds);
+- the layer state `_LayerBatch`: feature fields parsed as one batch and
+  every geometry resolved through one ladder, `_LayerBatch.geometry`;
+
+and four projections of it:
+
+- WKT rows (`decode_layer_rows` / `decode_tile_rows` / `decode_tiles`),
+  the compat/interop scan;
+- packed ragged dicts (`iter_layer_packed` / `decode_tiles_packed`);
+- gpack + envelope (`decode_tiles_gpack`), the re-encode pipelines' scan;
+- columnar point rows (`decode_tiles_columnar`). Its uniform lane decodes
+  this engine's own point framing for a whole Arrow batch in one
+  vectorized pass; every layer it cannot take is projected from the core.
+
+The three row scans share one per-batch framing, `_scan`. The hot-tile
+pre-stage `explode_hot_tiles` splits monolithic tiles for all of them.
 
 Decode applies tile_x/tile_y/scale like the reference:
 scale = extent / tile_mercator_size(z); decoded coord =
@@ -29,21 +45,57 @@ DECODED_SCHEMA = (
     "geom_wkt string, props map<string,string>, raster binary"
 )
 
+PACKED_SCHEMA = (
+    "z int, x long, y long, layer string, feature_id long, geom_type int, "
+    "kind string, xs array<double>, ys array<double>, offsets array<long>, "
+    "exterior array<boolean>, props map<string,string>, raster binary"
+)
+
+GPACK_SCHEMA = (
+    "z int, x long, y long, layer string, feature_id long, geom_type int, "
+    "_gpk binary, env_minx double, env_miny double, env_maxx double, "
+    "env_maxy double, props map<string,string>"
+)
+
+
+# ---------------------------------------------------------------------------
+# the decode core: one tile walk, one layer state, one geometry ladder
+# ---------------------------------------------------------------------------
+
+def _tile_layers(z: int, x: int, y: int, tile):
+    """The one tile walk: a stored (possibly compressed) tile -> (layer
+    index in wire order, layer message bytes, tile mercator bounds) per
+    layer. An empty or null tile yields nothing."""
+    if not tile:
+        return
+    data = Z.decompress(bytes(tile))
+    bounds = tilemath.tile_mercator_bbox_np(x, y, z)
+    for li, layer_bytes in enumerate(pbf.decode_tile(data)):
+        yield li, layer_bytes, bounds
+
 
 class _LayerBatch:
-    """Uniform per-layer decode state shared by the WKT and packed
-    scans: feature fields as GLOBAL flat arrays when the lockstep wire
-    walk holds (pbf.decode_features_batch return_global) with the
-    geometry batch-decoded straight off the global varint array
+    """Per-layer decode state shared by every projection: feature fields
+    as GLOBAL flat arrays when the lockstep wire walk holds
+    (pbf.decode_features_batch return_global) with the geometry
+    batch-decoded straight off the global varint array
     (commands.decode_geometry_vec_batch_global — vectorized frontier
     header walk), falling back to per-feature parsing on exotic wire
-    shapes. Either way the exposed surface is identical."""
+    shapes. Either way the exposed surface is identical. Property
+    values are stringified once per layer, or kept as their decoded
+    python variants when `typed`."""
 
-    __slots__ = ("n", "ids", "types", "tags", "tag_off", "glen",
-                 "batched", "seg", "_feats", "_fb", "dec_args")
+    __slots__ = ("n", "ids", "types", "tags", "tag_off", "glen", "batched",
+                 "seg", "_feats", "_fb", "dec_args", "name", "keys", "vals")
 
-    def __init__(self, layer: dict, dec_args: dict):
+    def __init__(self, layer: dict, dec_args: dict, typed: bool = False):
         self.dec_args = dec_args
+        self.name = layer["name"]
+        self.keys = layer["keys"]
+        self.vals = (
+            list(layer["values"]) if typed
+            else [None if v is None else str(v) for v in layer["values"]]
+        )
         msgs = layer["features"]
         # shape heuristic: the lockstep walk + ragged gathers win on
         # MANY SMALL features (the dense-tile shape) but cost ~3x the
@@ -69,7 +121,7 @@ class _LayerBatch:
                 segmented=True, **dec_args,
             )
         else:  # exotic wire shapes: parse each feature alone
-            feats = [pbf.decode_feature_arrays(m) for m in layer["features"]]
+            feats = [pbf.decode_feature_arrays(m) for m in msgs]
             self._feats = feats
             self.n = len(feats)
             self.ids = [f["id"] for f in feats]
@@ -86,7 +138,7 @@ class _LayerBatch:
                 segmented=True, **dec_args,
             )
 
-    def geom(self, fi: int):
+    def _commands(self, fi: int):
         if self._feats is not None:
             return self._feats[fi]["geometry"]
         fb = self._fb
@@ -99,56 +151,92 @@ class _LayerBatch:
         s = fb["rast_s"][fi]
         return fb["buf"][s : s + fb["rast_l"][fi]].tobytes() if s >= 0 else None
 
-    def fallback_geom(self, fi: int):
-        """Per-feature re-decode for features the batch declined —
-        the vectorized/scalar paths own the exact v1/v2 error matrix."""
-        g = None
-        if self.glen[fi] >= 64:
-            g = Cmd.decode_geometry_vec(self.geom(fi), self.types[fi], **self.dec_args)
+    def geometry(self, fi: int, packed: bool = False):
+        """The one geometry ladder: None (no geometry), "seg" (the
+        feature sits in the segmented batch arrays `self.seg`), or a
+        decoded geom tuple. A feature the batch declined is re-decoded
+        alone: vectorized when its command stream has >= 64 commands,
+        else — or when that declines too — by the scalar state machine,
+        which owns the exact v1/v2 error matrix. packed=True lets the
+        vectorized re-decode return its flat ("packed", dict) form, so a
+        large feature never becomes one Python object per part."""
+        if not self.glen[fi]:
+            return None
+        g = self.batched[fi]
         if g is None:
-            g = Cmd.decode_geometry(self.geom(fi), self.types[fi], **self.dec_args)
+            cmds, gt = self._commands(fi), self.types[fi]
+            if self.glen[fi] >= 64:
+                g = Cmd.decode_geometry_vec(cmds, gt, packed=packed, **self.dec_args)
+            if g is None:
+                g = Cmd.decode_geometry(cmds, gt, **self.dec_args)
         return g
 
-    def props_of(self, fi: int, keys: list, vals_str: list) -> dict:
+    def props(self, fi: int) -> dict:
         # out-of-range indices are silently skipped, like the reference
         # featureset (vector_tile_featureset_pbf.ipp:147-148)
         props = {}
-        tags, n_keys, n_vals = self.tags, len(keys), len(vals_str)
+        tags, keys, vals = self.tags, self.keys, self.vals
+        n_keys, n_vals = len(keys), len(vals)
         for i in range(self.tag_off[fi], self.tag_off[fi + 1] - 1, 2):
             ki, vi = tags[i], tags[i + 1]
             if ki >= n_keys or vi >= n_vals:
                 continue
-            props[keys[ki]] = vals_str[vi]
+            props[keys[ki]] = vals[vi]
         return props
 
 
-def _layer_ok(layer: dict) -> bool:
-    """datasource_pbf construction semantics (test/unit/datasource-pbf/
-    from_layer.cpp): an unknown layer version yields no features but
-    processing continues with subsequent layers; a v2 layer without a
-    declared extent is rejected (the reference throws — the scan skips
-    it so one hostile layer cannot fail a distributed decode; the
-    validity checker carries the LAYER_HAS_NO_EXTENT finding)."""
-    if layer["version"] not in (1, 2):
-        return False
-    if layer["version"] == 2 and not layer["has_extent"]:
-        return False
-    return True
-
-
-def _layer_dec_args(layer: dict, bounds, bbox) -> dict:
-    minx, miny, maxx, maxy = bounds
+def _open_layer(layer_bytes: bytes, bounds, bbox=None, typed: bool = False):
+    """Layer message -> its _LayerBatch, or None for a layer the scan
+    skips. datasource_pbf construction semantics (test/unit/
+    datasource-pbf/from_layer.cpp): an unknown layer version yields no
+    features but processing continues with subsequent layers; a v2
+    layer without a declared extent is rejected (the reference throws —
+    the scan skips it so one hostile layer cannot fail a distributed
+    decode; the validity checker carries the LAYER_HAS_NO_EXTENT
+    finding)."""
+    layer = pbf.decode_layer(bytes(layer_bytes))
+    version = layer["version"]
+    if version not in (1, 2) or (version == 2 and not layer["has_extent"]):
+        return None
+    minx, _miny, maxx, maxy = bounds
     # decode transform: px -> mercator (datasource_pbf scale semantics)
     scale = layer["extent"] / (float(maxx) - float(minx))
-    return dict(
-        version=layer["version"],
+    dec_args = dict(
+        version=version,
         tile_x=float(minx),
         tile_y=float(maxy),
         scale_x=scale,
         scale_y=-scale,  # y down in tile space
         bbox=bbox,
     )
+    return _LayerBatch(layer, dec_args, typed)
 
+
+def _scan(tiles: DataFrame, schema: str, project, keep: tuple = ()) -> DataFrame:
+    """The per-batch framing of the row scans: every tile of an Arrow
+    batch goes through the tile walk, `project(z, x, y, layer index,
+    layer bytes, bounds)` turns each layer into row tuples, and the
+    `keep` input columns ride along at the end of each row. Rows map
+    onto `schema` by position."""
+
+    def kernel(iterator):
+        for pdf in iterator:
+            out = []
+            for z, x, y, tile, *extras in zip(
+                pdf["z"], pdf["x"], pdf["y"], pdf["tile"], *(pdf[c] for c in keep)
+            ):
+                z, x, y, extras = int(z), int(x), int(y), tuple(extras)
+                for li, layer_bytes, bounds in _tile_layers(z, x, y, tile):
+                    out.extend(r + extras for r in project(z, x, y, li, layer_bytes, bounds))
+            if out:
+                yield pd.DataFrame(out)
+
+    return tiles.select("z", "x", "y", "tile", *keep).mapInPandas(kernel, schema=schema)
+
+
+# ---------------------------------------------------------------------------
+# projection 1: WKT rows
+# ---------------------------------------------------------------------------
 
 def decode_layer_rows(
     z: int, x: int, y: int, layer_bytes: bytes, bbox=None, bounds=None
@@ -158,41 +246,31 @@ def decode_layer_rows(
     passing it lets callers amortize it across a tile's layers."""
     if bounds is None:
         bounds = tilemath.tile_mercator_bbox_np(x, y, z)
-    layer = pbf.decode_layer(bytes(layer_bytes))
-    if not _layer_ok(layer):
+    lb = _open_layer(layer_bytes, bounds, bbox)
+    if lb is None:
         return []
-    dec_args = _layer_dec_args(layer, bounds, bbox)
-    lb = _LayerBatch(layer, dec_args)
     # features the batch kept segmented render straight from the flat
-    # ring arrays; everything else goes through the tuple writer
+    # ring arrays; decoded tuples go through one batch WKT pass
     seg_wkt: dict[int, str] = {}
     for gt, entry in (lb.seg or {}).items():
         ids, wkts = G.wkt_from_segmented(entry, is_polygon=(gt == Cmd.POLYGON))
         seg_wkt.update(zip(ids, wkts))
     wkt_out: list = [None] * lb.n
-    fallback: list = []  # (feature index, geom tuple) — one batch WKT pass
+    tuples: list = []  # (feature index, geom tuple)
     for fi in range(lb.n):
-        if not lb.glen[fi]:
+        g = lb.geometry(fi)
+        if g is None:
             continue
-        g = lb.batched[fi]
         if g == "seg":
             wkt_out[fi] = seg_wkt.get(fi)
-        else:
-            if g is None:
-                g = lb.fallback_geom(fi)
-            if g[0] != "empty":
-                fallback.append((fi, g))
-    if fallback:
-        for (fi, _), s in zip(fallback, G.to_wkt_batch([g for _, g in fallback])):
-            wkt_out[fi] = s
-    keys = layer["keys"]
-    # stringify the value dictionary ONCE (tags reference it repeatedly)
-    vals_str = [None if v is None else str(v) for v in layer["values"]]
-    name = layer["name"]
+        elif g[0] != "empty":
+            tuples.append((fi, g))
+    for (fi, _), s in zip(tuples, G.to_wkt_batch([g for _, g in tuples])):
+        wkt_out[fi] = s
     return [
         (
-            z, x, y, name, lb.ids[fi], lb.types[fi],
-            wkt_out[fi], lb.props_of(fi, keys, vals_str), lb.raster(fi),
+            z, x, y, lb.name, lb.ids[fi], lb.types[fi],
+            wkt_out[fi], lb.props(fi), lb.raster(fi),
         )
         for fi in range(lb.n)
     ]
@@ -200,15 +278,263 @@ def decode_layer_rows(
 
 def decode_tile_rows(z: int, x: int, y: int, tile: bytes, bbox=None) -> list[tuple]:
     """One tile -> decoded feature rows (mercator coordinates)."""
-    if not tile:
-        return []
-    data = Z.decompress(bytes(tile))
-    bounds = tilemath.tile_mercator_bbox_np(x, y, z)
-    rows = []
-    for layer_bytes in pbf.decode_tile(data):
-        rows.extend(decode_layer_rows(z, x, y, layer_bytes, bbox=bbox, bounds=bounds))
-    return rows
+    return [
+        row
+        for _li, layer_bytes, bounds in _tile_layers(z, x, y, tile)
+        for row in decode_layer_rows(z, x, y, layer_bytes, bbox=bbox, bounds=bounds)
+    ]
 
+
+def decode_tiles(tiles: DataFrame, bbox=None) -> DataFrame:
+    """tiles: (z, x, y, tile binary, ...) -> decoded feature rows (WKT
+    text out — the compat/interop scan; pipelines ride the packed/gpack
+    forms). `bbox` pushes a mercator query box into the decoder."""
+
+    def project(z, x, y, _li, layer_bytes, bounds):
+        return decode_layer_rows(z, x, y, layer_bytes, bbox=bbox, bounds=bounds)
+
+    return _scan(tiles, DECODED_SCHEMA, project)
+
+
+# ---------------------------------------------------------------------------
+# projection 2: packed ragged geometry
+# ---------------------------------------------------------------------------
+
+def iter_layer_packed(layer_bytes: bytes, bounds, bbox=None, typed: bool = False) -> list[tuple]:
+    """One layer message -> (name, feature_id, geom_type, pk_dict, props,
+    raster) tuples, where pk_dict is the packed ragged geometry
+    {kind, xs, ys, offsets[, exterior]} or None (raster-only feature).
+    Shared by every packed consumer (packed scan, gpack scan, packed
+    point lookup); empty/bbox-filtered geometry features without raster
+    are dropped, like the reference featureset's next() skip
+    (src/vector_tile_featureset_pbf.ipp:113-180). typed=True keeps
+    property values as their decoded python variants (int/float/bool/
+    str) instead of stringifying — the re-encode merge path needs the
+    Value types back (vector_tile_load_tile.hpp:93-137)."""
+    lb = _open_layer(layer_bytes, bounds, bbox, typed)
+    if lb is None:
+        return []
+    seg_pk = _packed_from_seg(lb.seg)
+    out = []
+    for fi in range(lb.n):
+        g = lb.geometry(fi, packed=True)
+        pk = None
+        if g == "seg":
+            pk = seg_pk[fi]
+        elif g is not None and g[0] != "empty":
+            pk = g[1] if g[0] == "packed" else _pack_from_parts(g)[1]
+        raster = lb.raster(fi)
+        if pk is None and raster is None:
+            continue
+        out.append((lb.name, lb.ids[fi], lb.types[fi], pk, lb.props(fi), raster))
+    return out
+
+
+def decode_tiles_packed(tiles: DataFrame, bbox=None) -> DataFrame:
+    """Decode scan with RAGGED geometry output: flat xs/ys + part
+    offsets per feature (Arrow list columns), never a per-part Python
+    object or a WKT string. This is the scale form of S2/S3 — a feature
+    with 168k line parts (the reference's multi_line bench tile) is
+    three arrays here, and downstream Spark ops explode/aggregate the
+    list columns JVM-side. `bbox` pushes a mercator query box INTO the
+    geometry decoder (the reference's filter_at_point/bbox query,
+    src/vector_tile_datasource_pbf.ipp:196-216)."""
+
+    def project(z, x, y, _li, layer_bytes, bounds):
+        for name, fid, gt, pk, props, raster in iter_layer_packed(
+            layer_bytes, bounds, bbox=bbox
+        ):
+            geom = (
+                (None,) * 5 if pk is None
+                else (pk["kind"], pk["xs"], pk["ys"], pk["offsets"], pk.get("exterior"))
+            )
+            yield (z, x, y, name, fid, gt, *geom, props, raster)
+
+    return _scan(tiles, PACKED_SCHEMA, project)
+
+
+def _packed_from_seg(seg) -> dict:
+    """Segmented batch-decode arrays -> {feature id: packed dict}. Per
+    feature this is three array VIEWS into the flat batch output plus an
+    offsets subtraction — no vstack, no per-part objects."""
+    out: dict[int, dict] = {}
+    if not seg:
+        return out
+    kind_of = {Cmd.LINESTRING: "multilinestring", Cmd.POLYGON: "multipolygon"}
+    for gt, entry in seg.items():
+        rl = entry["ring_len"]
+        if len(rl) == 0:
+            continue
+        rf = entry["ring_feat"]
+        coords = entry["coords"]
+        ex = entry.get("exterior")
+        roff = np.concatenate([[0], np.cumsum(rl)]).astype(np.int64)
+        fb = np.flatnonzero(np.concatenate([[True], rf[1:] != rf[:-1]]))
+        fe = np.concatenate([fb[1:], [len(rl)]])
+        kind = kind_of[gt]
+        xs_all = np.ascontiguousarray(coords[:, 0])
+        ys_all = np.ascontiguousarray(coords[:, 1])
+        for a, b in zip(fb.tolist(), fe.tolist()):
+            s, e = roff[a], roff[b]
+            d = {
+                "kind": kind,
+                "xs": xs_all[s:e],
+                "ys": ys_all[s:e],
+                "offsets": roff[a : b + 1] - s,
+            }
+            if ex is not None:
+                d["exterior"] = ex[a:b]
+            out[int(rf[a])] = d
+    return out
+
+
+def _pack_from_parts(geom) -> tuple:
+    """Decoded geom tuple -> the packed dict form."""
+    kind, val = geom
+    if kind == "empty":
+        return ("empty", None)
+    ext = None
+    if kind in ("point", "multipoint"):
+        parts, out_kind = [np.atleast_2d(val)], "multipoint"
+    elif kind in ("linestring", "multilinestring"):
+        parts = [val] if kind == "linestring" else val
+        out_kind = "multilinestring"
+    else:  # polygon / multipolygon: each polygon's first ring is its exterior
+        polys = [val] if kind == "polygon" else val
+        parts = [r for p in polys for r in p]
+        out_kind = "multipolygon"
+        ext = np.array([i == 0 for p in polys for i in range(len(p))], dtype=bool)
+    parts = [np.asarray(p) for p in parts]
+    lens = np.asarray([len(p) for p in parts], dtype=np.int64)
+    flat = parts[0] if len(parts) == 1 else np.vstack(parts)
+    return ("packed", {
+        "kind": out_kind, "xs": flat[:, 0].astype(np.float64),
+        "ys": flat[:, 1].astype(np.float64),
+        "offsets": np.concatenate([[0], np.cumsum(lens)]).astype(np.int64),
+        "exterior": ext,
+    })
+
+
+def features_at_point(
+    tiles: DataFrame, lon: float, lat: float, tol_merc: float = 0.0,
+    packed: bool = True,
+) -> DataFrame:
+    """S4: point-lookup scan over encoded tiles — decode with a tiny bbox
+    pushed *into* the decoder (the reference's filter_at_point,
+    src/vector_tile_datasource_pbf.ipp:196-216).
+
+    Cell pruning happens BEFORE any decode: only tiles whose mercator
+    bbox (grown by the tolerance) contains the query point survive the
+    Column filter, so a z-keyed/partitioned tile store prunes to O(1)
+    tiles per zoom instead of scanning the world. The default return is
+    the ragged array form (PACKED_SCHEMA) — the scale path when hits
+    feed further relational stages; `packed=False` yields WKT rows for
+    interop (the compat boundary, via decode_tiles)."""
+    from pyspark.sql import functions as F
+
+    mx, my = tilemath.mercator_np(lon, lat)
+    bbox = (float(mx) - tol_merc, float(my) - tol_merc, float(mx) + tol_merc, float(my) + tol_merc)
+
+    minx, miny, maxx, maxy = tilemath.tile_bbox_cols(
+        F.col("z"), F.col("x"), F.col("y")
+    )
+    tiles = tiles.where(
+        (F.lit(bbox[2]) >= minx) & (F.lit(bbox[0]) < maxx)
+        & (F.lit(bbox[3]) >= miny) & (F.lit(bbox[1]) < maxy)
+    )
+    if packed:
+        return decode_tiles_packed(tiles, bbox=bbox)
+    return decode_tiles(tiles, bbox=bbox)
+
+
+# ---------------------------------------------------------------------------
+# projection 3: gpack + envelope
+# ---------------------------------------------------------------------------
+
+def decode_tiles_gpack(tiles: DataFrame, merge_col: str | None = None) -> DataFrame:
+    """Decode scan emitting the compact gpack geometry + its mercator
+    envelope — the exact input shape build_geom_tiles' encode stages
+    read. The decode->re-encode pipelines (pyramid re-tiling, composite
+    slow path) ride this: geometry crosses the boundary as one binary
+    column, no WKT text and no per-part Python objects, and the
+    envelope stage of the encoder is already paid here. The default
+    scan is geometry-only.
+
+    merge_col names the input source-order column of the composite
+    re-encode merge and switches to its row shape: after the base
+    columns come layer_idx (wire order of the layer within its tile),
+    feat_idx (wire order of the kept feature within its layer), a ptype
+    map (key -> one of s/i/f/b) so the stringified props can be
+    restored to their Value variant types at re-encode, the
+    Feature.raster bytes, and merge_col itself. Raster-only features
+    are KEPT (as empty-geometry rows, _gpk = the empty pack) so the
+    merge can carry them."""
+    merge = merge_col is not None
+    schema = GPACK_SCHEMA
+    keep = (merge_col,) if merge else ()
+    if merge:
+        dtype = tiles.schema[merge_col].dataType.simpleString()
+        schema += (
+            ", layer_idx int, feat_idx long, ptype map<string,string>, "
+            f"raster binary, {merge_col} {dtype}"
+        )
+
+    def project(z, x, y, li, layer_bytes, bounds):
+        fi = 0
+        for name, fid, gt, pk, props, raster in iter_layer_packed(
+            layer_bytes, bounds, typed=merge
+        ):
+            if pk is None:
+                if not merge:
+                    continue  # raster-only: nothing to re-tile
+                gpk, env = bytes([0]), (float("nan"),) * 4
+            else:
+                gpk, env = G.gpack_from_packed(
+                    pk["kind"], pk["xs"], pk["ys"], pk["offsets"], pk.get("exterior"),
+                )
+            row = (z, x, y, name, fid, gt, gpk, *env)
+            if merge:
+                yield row + (
+                    {k: None if v is None else str(v) for k, v in props.items()},
+                    li, fi, {k: _vtag(v) for k, v in props.items()}, raster,
+                )
+            else:
+                yield row + (props,)
+            fi += 1
+
+    return _scan(tiles, schema, project, keep)
+
+
+def _vtag(v) -> str:
+    """Value-variant tag for the merge gpack scan: b(ool) before i(nt) —
+    bool is an int subclass."""
+    if isinstance(v, bool):
+        return "b"
+    if isinstance(v, int):
+        return "i"
+    if isinstance(v, float):
+        return "f"
+    return "s"
+
+
+def parse_tagged_value(v, tag: str):
+    """Inverse of the merge gpack scan's stringification: restore the
+    python variant so the re-encoder writes the same Value type family
+    (ints stay ints — the r4 nullable-int bug class)."""
+    if v is None:
+        return None
+    if tag == "i":
+        return int(v)
+    if tag == "f":
+        return float(v)
+    if tag == "b":
+        return v == "True"
+    return v
+
+
+# ---------------------------------------------------------------------------
+# hot-tile split: the pre-stage of every decode scan
+# ---------------------------------------------------------------------------
 
 def _layer_sections(data: bytes):
     """One walk over a layer message's top-level fields ->
@@ -442,7 +768,6 @@ def explode_hot_tiles(
     tiles: DataFrame,
     chunk_bytes: int = 1 << 20,
     hot_bytes: int = 1 << 21,
-    shuffle: bool = True,
 ) -> DataFrame:
     """Scale pre-stage for every decode scan: a monolithic tile (one
     row = one task = the decode wall floor at 100x data — r4 BENCH.md's
@@ -492,391 +817,14 @@ def explode_hot_tiles(
                 )
 
     chunks = hot.mapInPandas(kernel, schema="z int, x long, y long, tile binary")
-    if shuffle:
-        npart = int(tiles.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        chunks = chunks.repartition(npart)
-    return cold.unionByName(chunks)
-
-
-def decode_tiles(tiles: DataFrame, bbox=None) -> DataFrame:
-    """tiles: (z, x, y, tile binary, ...) -> decoded feature rows (WKT
-    text out — the compat/interop scan; pipelines ride the packed/gpack
-    forms). `bbox` pushes a mercator query box into the decoder."""
-
-    def kernel(iterator):
-        for pdf in iterator:
-            out = []
-            for z, x, y, tile in zip(pdf["z"], pdf["x"], pdf["y"], pdf["tile"]):
-                out.extend(decode_tile_rows(int(z), int(x), int(y), tile, bbox=bbox))
-            if out:
-                yield pd.DataFrame(
-                    out,
-                    columns=[
-                        "z", "x", "y", "layer", "feature_id", "geom_type",
-                        "geom_wkt", "props", "raster",
-                    ],
-                )
-
-    return tiles.select("z", "x", "y", "tile").mapInPandas(kernel, schema=DECODED_SCHEMA)
-
-
-PACKED_SCHEMA = (
-    "z int, x long, y long, layer string, feature_id long, geom_type int, "
-    "kind string, xs array<double>, ys array<double>, offsets array<long>, "
-    "exterior array<boolean>, props map<string,string>, raster binary"
-)
-
-
-def iter_layer_packed(layer_bytes: bytes, bounds, bbox=None, typed: bool = False) -> list[tuple]:
-    """One layer message -> (name, feature_id, geom_type, pk_dict, props,
-    raster) tuples, where pk_dict is the packed ragged geometry
-    {kind, xs, ys, offsets[, exterior]} or None (raster-only feature).
-    Shared decode core of every packed consumer (packed scan, gpack
-    scan, packed point lookup); empty/bbox-filtered geometry features
-    without raster are dropped, like the reference featureset's
-    next() skip (src/vector_tile_featureset_pbf.ipp:113-180).
-    typed=True keeps property values as their decoded python variants
-    (int/float/bool/str) instead of stringifying — the re-encode merge
-    path needs the Value types back (vector_tile_load_tile.hpp:93-137)."""
-    layer = pbf.decode_layer(bytes(layer_bytes))
-    if not _layer_ok(layer):
-        return []
-    kw = _layer_dec_args(layer, bounds, bbox)
-    lb = _LayerBatch(layer, kw)
-    seg_pk = _packed_from_seg(lb.seg)
-    keys = layer["keys"]
-    if typed:
-        vals_str = list(layer["values"])
-    else:
-        vals_str = [None if v is None else str(v) for v in layer["values"]]
-    name = layer["name"]
-    out = []
-    for fi in range(lb.n):
-        pk = None
-        if lb.glen[fi]:
-            g = lb.batched[fi]
-            if g == "seg":
-                pk = ("packed", seg_pk[fi])
-            elif g is not None:
-                pk = _pack_from_parts(g)
-            else:
-                pk = Cmd.decode_geometry_vec(
-                    lb.geom(fi), lb.types[fi], packed=True, **kw
-                )
-                if pk is None:
-                    pk = _pack_from_parts(Cmd.decode_geometry(lb.geom(fi), lb.types[fi], **kw))
-            if pk[0] == "empty":
-                pk = None
-            else:
-                pk = pk[1]
-        raster = lb.raster(fi)
-        if pk is None and raster is None:
-            continue
-        out.append(
-            (name, lb.ids[fi], lb.types[fi], pk, lb.props_of(fi, keys, vals_str), raster)
-        )
-    return out
-
-
-def decode_tiles_packed(tiles: DataFrame, bbox=None) -> DataFrame:
-    """Decode scan with RAGGED geometry output: flat xs/ys + part
-    offsets per feature (Arrow list columns), never a per-part Python
-    object or a WKT string. This is the scale form of S2/S3 — a feature
-    with 168k line parts (the reference's multi_line bench tile) is
-    three arrays here, and downstream Spark ops explode/aggregate the
-    list columns JVM-side. Non-canonical features fall back through the
-    scalar decoder and are re-packed from its part lists. `bbox` pushes
-    a mercator query box INTO the geometry decoder (the reference's
-    filter_at_point/bbox query, src/vector_tile_datasource_pbf.ipp:196-216)."""
-
-    def kernel(iterator):
-        for pdf in iterator:
-            out = []
-            for z, x, y, tile in zip(pdf["z"], pdf["x"], pdf["y"], pdf["tile"]):
-                z, x, y = int(z), int(x), int(y)
-                if not tile:
-                    continue
-                data = Z.decompress(bytes(tile))
-                bounds = tilemath.tile_mercator_bbox_np(x, y, z)
-                for layer_bytes in pbf.decode_tile(data):
-                    for name, fid, gt, pk, props, raster in iter_layer_packed(
-                        layer_bytes, bounds, bbox=bbox
-                    ):
-                        if pk is None:
-                            out.append(
-                                (z, x, y, name, fid, gt, None, None, None,
-                                 None, None, props, raster)
-                            )
-                        else:
-                            out.append(
-                                (z, x, y, name, fid, gt, pk["kind"], pk["xs"],
-                                 pk["ys"], pk["offsets"], pk.get("exterior"),
-                                 props, raster)
-                            )
-            if out:
-                yield pd.DataFrame(
-                    out,
-                    columns=[
-                        "z", "x", "y", "layer", "feature_id", "geom_type",
-                        "kind", "xs", "ys", "offsets", "exterior", "props",
-                        "raster",
-                    ],
-                )
-
-    return tiles.select("z", "x", "y", "tile").mapInPandas(kernel, schema=PACKED_SCHEMA)
-
-
-GPACK_SCHEMA = (
-    "z int, x long, y long, layer string, feature_id long, geom_type int, "
-    "_gpk binary, env_minx double, env_miny double, env_maxx double, "
-    "env_maxy double, props map<string,string>"
-)
-
-
-def decode_tiles_gpack(
-    tiles: DataFrame,
-    bbox=None,
-    keep_cols: list[str] | None = None,
-    ordinals: bool = False,
-    typed: bool = False,
-    with_raster: bool = False,
-) -> DataFrame:
-    """Decode scan emitting the compact gpack geometry + its mercator
-    envelope — the exact input shape build_geom_tiles' encode stages
-    read. The decode->re-encode pipelines (pyramid re-tiling, composite
-    slow path) ride this: geometry crosses the boundary as one binary
-    column, no WKT text and no per-part Python objects, and the
-    envelope stage of the encoder is already paid here.
-
-    keep_cols: input columns carried through per decoded row (e.g. a
-    source-order column for the composite merge). ordinals adds
-    layer_idx (wire order of the layer within its tile) and feat_idx
-    (wire order of the kept feature within its layer). typed adds a
-    ptype map (key -> one of s/i/f/b) so the stringified props can be
-    restored to their Value variant types at re-encode. with_raster adds
-    the Feature.raster bytes and KEEPS raster-only features (as
-    empty-geometry rows, _gpk = the empty pack) so the re-encode merge
-    can carry them; the default scan stays geometry-only."""
-    keep = list(keep_cols or [])
-    schema = GPACK_SCHEMA
-    if ordinals:
-        schema += ", layer_idx int, feat_idx long"
-    if typed:
-        schema += ", ptype map<string,string>"
-    if with_raster:
-        schema += ", raster binary"
-    by_name = {f.name: f for f in tiles.schema}
-    for c in keep:
-        schema += f", {c} {by_name[c].dataType.simpleString()}"
-    base_cols = [
-        "z", "x", "y", "layer", "feature_id", "geom_type",
-        "_gpk", "env_minx", "env_miny", "env_maxx", "env_maxy", "props",
-    ]
-    out_cols = list(base_cols)
-    if ordinals:
-        out_cols += ["layer_idx", "feat_idx"]
-    if typed:
-        out_cols += ["ptype"]
-    if with_raster:
-        out_cols += ["raster"]
-    out_cols += keep
-
-    def kernel(iterator):
-        for pdf in iterator:
-            out = []
-            keep_vals = [pdf[c] for c in keep]
-            for z, x, y, tile, *extras in zip(
-                pdf["z"], pdf["x"], pdf["y"], pdf["tile"], *keep_vals
-            ):
-                z, x, y = int(z), int(x), int(y)
-                if not tile:
-                    continue
-                extras = tuple(extras)
-                data = Z.decompress(bytes(tile))
-                bounds = tilemath.tile_mercator_bbox_np(x, y, z)
-                for li, layer_bytes in enumerate(pbf.decode_tile(data)):
-                    fi = 0
-                    for name, fid, gt, pk, props, raster in iter_layer_packed(
-                        layer_bytes, bounds, bbox=bbox, typed=typed
-                    ):
-                        if pk is None:
-                            if not with_raster:
-                                continue  # raster-only: nothing to re-tile
-                            gpk = bytes([0])
-                            env = (float("nan"),) * 4
-                        else:
-                            gpk, env = G.gpack_from_packed(
-                                pk["kind"], pk["xs"], pk["ys"], pk["offsets"],
-                                pk.get("exterior"),
-                            )
-                        rec = [z, x, y, name, fid, gt, gpk,
-                               env[0], env[1], env[2], env[3]]
-                        if typed:
-                            rec.append(
-                                {k: None if v is None else str(v)
-                                 for k, v in props.items()}
-                            )
-                        else:
-                            rec.append(props)
-                        if ordinals:
-                            rec += [li, fi]
-                        if typed:
-                            rec.append({k: _vtag(v) for k, v in props.items()})
-                        if with_raster:
-                            rec.append(raster)
-                        out.append((*rec, *extras))
-                        fi += 1
-            if out:
-                yield pd.DataFrame(out, columns=out_cols)
-
-    return tiles.select("z", "x", "y", "tile", *keep).mapInPandas(kernel, schema=schema)
-
-
-def _vtag(v) -> str:
-    """Value-variant tag for the typed gpack scan: b(ool) before i(nt) —
-    bool is an int subclass."""
-    if isinstance(v, bool):
-        return "b"
-    if isinstance(v, int):
-        return "i"
-    if isinstance(v, float):
-        return "f"
-    return "s"
-
-
-def parse_tagged_value(v, tag: str):
-    """Inverse of the typed gpack scan's stringification: restore the
-    python variant so the re-encoder writes the same Value type family
-    (ints stay ints — the r4 nullable-int bug class)."""
-    if v is None:
-        return None
-    if tag == "i":
-        return int(v)
-    if tag == "f":
-        return float(v)
-    if tag == "b":
-        return v == "True"
-    return v
-
-
-def _packed_from_seg(seg) -> dict:
-    """Segmented batch-decode arrays -> {feature id: packed dict}. Per
-    feature this is three array VIEWS into the flat batch output plus an
-    offsets subtraction — no vstack, no per-part objects."""
-    out: dict[int, dict] = {}
-    if not seg:
-        return out
-    kind_of = {Cmd.LINESTRING: "multilinestring", Cmd.POLYGON: "multipolygon"}
-    for gt, entry in seg.items():
-        rl = entry["ring_len"]
-        if len(rl) == 0:
-            continue
-        rf = entry["ring_feat"]
-        coords = entry["coords"]
-        ex = entry.get("exterior")
-        roff = np.concatenate([[0], np.cumsum(rl)]).astype(np.int64)
-        fb = np.flatnonzero(np.concatenate([[True], rf[1:] != rf[:-1]]))
-        fe = np.concatenate([fb[1:], [len(rl)]])
-        kind = kind_of[gt]
-        xs_all = np.ascontiguousarray(coords[:, 0])
-        ys_all = np.ascontiguousarray(coords[:, 1])
-        for a, b in zip(fb.tolist(), fe.tolist()):
-            s, e = roff[a], roff[b]
-            d = {
-                "kind": kind,
-                "xs": xs_all[s:e],
-                "ys": ys_all[s:e],
-                "offsets": roff[a : b + 1] - s,
-            }
-            if ex is not None:
-                d["exterior"] = ex[a:b]
-            out[int(rf[a])] = d
-    return out
-
-
-def _pack_from_parts(geom) -> tuple:
-    """Scalar-decoder output -> the packed dict form."""
-    kind, val = geom
-    if kind == "empty":
-        return ("empty", None)
-    if kind == "point":
-        parts, out_kind, ext = [np.atleast_2d(val)], "multipoint", None
-    elif kind == "multipoint":
-        parts, out_kind, ext = [np.atleast_2d(val)], "multipoint", None
-    elif kind == "linestring":
-        parts, out_kind, ext = [np.asarray(val)], "multilinestring", None
-    elif kind == "multilinestring":
-        parts, out_kind, ext = [np.asarray(p) for p in val], "multilinestring", None
-    elif kind == "polygon":
-        parts = [np.asarray(r) for r in val]
-        out_kind = "multipolygon"
-        ext = np.array([True] + [False] * (len(parts) - 1), dtype=bool)
-    else:  # multipolygon
-        parts = [np.asarray(r) for p in val for r in p]
-        out_kind = "multipolygon"
-        ext = np.concatenate(
-            [[True] + [False] * (len(p) - 1) for p in val]
-        ).astype(bool)
-    lens = np.asarray([len(p) for p in parts], dtype=np.int64)
-    flat = parts[0] if len(parts) == 1 else np.vstack(parts)
-    return ("packed", {
-        "kind": out_kind, "xs": flat[:, 0].astype(np.float64),
-        "ys": flat[:, 1].astype(np.float64),
-        "offsets": np.concatenate([[0], np.cumsum(lens)]).astype(np.int64),
-        "exterior": ext,
-    })
-
-
-def features_at_point(
-    tiles: DataFrame, lon: float, lat: float, tol_merc: float = 0.0,
-    packed: bool = True,
-) -> DataFrame:
-    """S4: point-lookup scan over encoded tiles — decode with a tiny bbox
-    pushed *into* the decoder (the reference's filter_at_point,
-    src/vector_tile_datasource_pbf.ipp:196-216).
-
-    Cell pruning happens BEFORE any decode: only tiles whose mercator
-    bbox (grown by the tolerance) contains the query point survive the
-    Column filter, so a z-keyed/partitioned tile store prunes to O(1)
-    tiles per zoom instead of scanning the world. The default return is
-    the ragged array form (PACKED_SCHEMA) — the scale path when hits
-    feed further relational stages; `packed=False` yields WKT rows for
-    interop (the compat boundary, via decode_tiles)."""
-    from pyspark.sql import functions as F
-
-    mx, my = tilemath.mercator_np(lon, lat)
-    bbox = (float(mx) - tol_merc, float(my) - tol_merc, float(mx) + tol_merc, float(my) + tol_merc)
-
-    minx, miny, maxx, maxy = tilemath.tile_bbox_cols(
-        F.col("z"), F.col("x"), F.col("y")
-    )
-    tiles = tiles.where(
-        (F.lit(bbox[2]) >= minx) & (F.lit(bbox[0]) < maxx)
-        & (F.lit(bbox[3]) >= miny) & (F.lit(bbox[1]) < maxy)
-    )
-    if packed:
-        return decode_tiles_packed(tiles, bbox=bbox)
-    return decode_tiles(tiles, bbox=bbox)
+    npart = int(tiles.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return cold.unionByName(chunks.repartition(npart))
 
 
 # ---------------------------------------------------------------------------
-# vectorized point-layer decode (matches the reference's decode-throughput
-# benchmark direction, bench/readme.md:24-30)
+# projection 4: columnar point rows (matches the reference's
+# decode-throughput benchmark direction, bench/readme.md:24-30)
 # ---------------------------------------------------------------------------
-
-def _wkt_point_xy(wkt) -> tuple[float, float]:
-    """POINT(x y) -> (x, y); anything else -> (nan, nan)."""
-    if isinstance(wkt, str) and wkt.startswith("POINT"):
-        lp, rp = wkt.find("("), wkt.rfind(")")
-        if 0 < lp < rp:
-            parts = wkt[lp + 1 : rp].split()
-            if len(parts) == 2:
-                try:
-                    return float(parts[0]), float(parts[1])
-                except ValueError:
-                    pass
-    return (float("nan"), float("nan"))
-
 
 def _packed_rows_ok(m: np.ndarray, ml: np.ndarray, c: int) -> np.ndarray:
     """Per-row structural verification of the packed point framing.
@@ -907,35 +855,31 @@ def _packed_rows_ok(m: np.ndarray, ml: np.ndarray, c: int) -> np.ndarray:
     return ok
 
 
-def decode_point_layer_vec(layer: dict, region: bytes):
-    """Uniform point layers (this engine's packed framing) decode as one
-    varint stream + reshape: per feature
-    [0x12 flen 0x12 tlen tags*(2c) 0x18 0x01 0x22 glen 0x09 zzx zzy].
-    Returns (tags (n,2c) int64, px, py int64) or None if the layer is
-    not uniform (caller falls back to the per-feature walk)."""
-    c = len(layer["keys"])
-    if c == 0 or region is None:
-        return None
-    res = pbf.uniform_point_columns(region, c)
-    if res is None:
-        return None
-    vidx, zz, row_ok = res
-    if not row_ok.all():
-        return None
-    n = len(vidx)
-    tags = np.empty((n, 2 * c), dtype=np.int64)
-    tags[:, 0::2] = np.arange(c, dtype=np.int64)
-    tags[:, 1::2] = vidx.astype(np.int64)
-    px = Cmd.unzigzag32(zz[:, 0]).astype(np.int64)
-    py = Cmd.unzigzag32(zz[:, 1]).astype(np.int64)
-    return tags, px, py
+def _point_rows(z: int, x: int, y: int, layer_bytes: bytes, prop_keys: list[str]) -> list[tuple]:
+    """Columnar projection of the core for a layer the uniform lane
+    cannot take: one (z, x, y, layer, mx, my, *props) row per feature.
+    mx/my come straight from a decoded single point; any other geometry
+    keeps NaN by design."""
+    lb = _open_layer(layer_bytes, tilemath.tile_mercator_bbox_np(x, y, z))
+    if lb is None:
+        return []
+    rows = []
+    nan = float("nan")
+    for fi in range(lb.n):
+        g = lb.geometry(fi)
+        mx = my = nan
+        if g is not None and g != "seg" and g[0] == "point":
+            mx, my = float(g[1][0]), float(g[1][1])
+        props = lb.props(fi)
+        rows.append((z, x, y, lb.name, mx, my, *(props.get(k) for k in prop_keys)))
+    return rows
 
 
 def decode_tiles_columnar(tiles: DataFrame, prop_keys: list[str]) -> DataFrame:
     """Scale-path decode: point tiles -> columnar rows (one column per
     property key). The per-tile varint streams of a whole Arrow batch
     concatenate into ONE vectorized decode + reshape (tiny tiles cost
-    ~zlib only); non-uniform layers fall back to the generic walk."""
+    ~zlib only); non-uniform layers are projected from the decode core."""
     out_schema = (
         "z int, x long, y long, layer string, mx double, my double, "
         + ", ".join(f"`{k}` string" for k in prop_keys)
@@ -950,6 +894,7 @@ def columnar_kernel(prop_keys: list[str]):
     (the dense-tile decode anchor)."""
     c_expected = len(prop_keys)
     w = 11 + 2 * c_expected
+    fallback_cols = ["z", "x", "y", "layer", "mx", "my", *prop_keys]
 
     def kernel(iterator):
         for pdf in iterator:
@@ -963,6 +908,15 @@ def columnar_kernel(prop_keys: list[str]):
             blob_tile: list[int] = []
             blobs: list[bytes] = []
             fallback_rows: list[tuple] = []
+
+            def fallback(i):
+                t = blob_tile[i]
+                fallback_rows.extend(
+                    _point_rows(int(zs[t]), int(xs[t]), int(ys[t]), blobs[i], prop_keys)
+                )
+
+            # the uniform lane gathers the layers of the whole batch for
+            # one vectorized decode (no per-tile bounds or layer state)
             for t in range(n_tiles):
                 tile = tiles_col[t]
                 if not tile:
@@ -983,11 +937,8 @@ def columnar_kernel(prop_keys: list[str]):
                 except Exception:
                     meta = None
             if nlay and meta is None:
-                for i, lb in enumerate(blobs):
-                    t = blob_tile[i]
-                    fallback_rows.extend(
-                        decode_layer_rows(int(zs[t]), int(xs[t]), int(ys[t]), lb)
-                    )
+                for i in range(nlay):
+                    fallback(i)
                 nlay = 0
             if nlay:
                 buf = meta["buf"]
@@ -1027,10 +978,7 @@ def columnar_kernel(prop_keys: list[str]):
                 uniform = np.zeros(nlay, dtype=bool)
                 uniform[cand] = True
                 for i in np.flatnonzero(~uniform):
-                    t = blob_tile[i]
-                    fallback_rows.extend(
-                        decode_layer_rows(int(zs[t]), int(xs[t]), int(ys[t]), blobs[i])
-                    )
+                    fallback(i)
 
             if nlay and len(cand):
                 flen = meta["feat_end"][cand] - meta["feat_start"][cand]
@@ -1057,11 +1005,7 @@ def columnar_kernel(prop_keys: list[str]):
                     bad_meta = np.zeros(len(cand), dtype=bool)
                     np.logical_or.at(bad_meta, rep, ~row_ok)
                     for ci in np.flatnonzero(bad_meta):
-                        i = cand[ci]
-                        t = blob_tile[i]
-                        fallback_rows.extend(
-                            decode_layer_rows(int(zs[t]), int(xs[t]), int(ys[t]), blobs[i])
-                        )
+                        fallback(cand[ci])
                     keep = ~bad_meta[rep]
                     if res is not None:
                         vidx_m, zz_m = vidx_m[keep], zz_m[keep]
@@ -1104,22 +1048,7 @@ def columnar_kernel(prop_keys: list[str]):
                         )
                     )
             if fallback_rows:
-                # recover point coordinates from the decoded WKT instead of
-                # nulling them (non-point geometries keep NaN by design)
-                fmx, fmy = zip(*(_wkt_point_xy(r[6]) for r in fallback_rows))
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "z": [r[0] for r in fallback_rows],
-                            "x": [r[1] for r in fallback_rows],
-                            "y": [r[2] for r in fallback_rows],
-                            "layer": [r[3] for r in fallback_rows],
-                            "mx": np.array(fmx, dtype=np.float64),
-                            "my": np.array(fmy, dtype=np.float64),
-                            **{k: [r[7].get(k) for r in fallback_rows] for k in prop_keys},
-                        }
-                    )
-                )
+                frames.append(pd.DataFrame(fallback_rows, columns=fallback_cols))
             if frames:
                 yield pd.concat(frames, ignore_index=True)
 

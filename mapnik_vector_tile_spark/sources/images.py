@@ -101,17 +101,6 @@ def generate_images(
     return path
 
 
-def read_images(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
-    if fmt == "iceberg":
-        try:
-            return spark.read.format("iceberg").load(path)
-        except Exception as exc:  # jars absent in this environment
-            raise NotImplementedError(
-                "Iceberg runtime not on classpath; pass fmt='parquet'"
-            ) from exc
-    return spark.read.parquet(path)
-
-
 def with_location(images: DataFrame) -> DataFrame:
     """Derive (lon, lat) per FIXTURES.md §1, hotspot clause included."""
     row_idx = F.substring("image_id", 4, 12).cast("long")

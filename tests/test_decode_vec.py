@@ -167,6 +167,46 @@ def test_parity_random_polygons(rings):
             assert gv in (None, "raised")
 
 
+@settings(max_examples=60, deadline=None)
+@given(st.lists(st.tuples(st.integers(0, 3000), st.integers(0, 3000),
+                          st.integers(4, 900), st.booleans()),
+                min_size=1, max_size=8),
+       st.sampled_from([1, 2]), st.booleans())
+def test_parity_random_rings_flat_and_parts(rings, version, use_bbox):
+    """Rings of either winding, in any order, with and without a bbox:
+    the vectorized ring classification gives the scalar walk's result
+    both as the part list and, unpacked, as the flat packed form."""
+    z = Cmd._zz32
+    cmds, cx, cy = [], 0, 0
+    for x0, y0, w, ccw in rings:
+        pts = [(x0, y0), (x0 + w, y0), (x0 + w, y0 + w), (x0, y0 + w)]
+        if not ccw:
+            pts = pts[::-1]
+        cmds += [9, z(pts[0][0] - cx), z(pts[0][1] - cy), (3 << 3) | 2]
+        for (ax, ay), (bx, by) in zip(pts, pts[1:]):
+            cmds += [z(bx - ax), z(by - ay)]
+        cmds.append(15)
+        cx, cy = pts[-1]
+    kw = dict(version=version, bbox=(500.0, 500.0, 2500.0, 2500.0) if use_bbox else None)
+    try:
+        gs = Cmd.decode_geometry(cmds, 3, **kw)
+    except Cmd.DecodeError:
+        for packed in (False, True):
+            with pytest.raises(Cmd.DecodeError):
+                Cmd.decode_geometry_vec(cmds, 3, packed=packed, **kw)
+        return
+    _assert_same(Cmd.decode_geometry_vec(cmds, 3, **kw), gs)
+    pk = Cmd.decode_geometry_vec(cmds, 3, packed=True, **kw)
+    if gs[0] == "empty":
+        assert pk == ("empty", None)
+        return
+    parts, ext = _unpack(pk[1])
+    assert [np.array_equal(a, b) for a, b in zip(parts, _flat(gs))] == [True] * len(parts)
+    assert len(parts) == len(_flat(gs))
+    owners = [len(p) for p in (gs[1] if gs[0] == "multipolygon" else [gs[1]])]
+    assert ext.tolist() == [i == 0 for n in owners for i in range(n)]
+
+
 @pytest.mark.skipif(not os.path.isdir(BENCH), reason="reference bench not mounted")
 @pytest.mark.parametrize(
     "name,z,x,y",
@@ -207,9 +247,8 @@ def test_decode_feature_arrays_matches_decode_feature():
     assert list(a["geometry"]) == [int(v) for v in b["geometry"]]
 
 
-def _unpack(pk):
+def _unpack(d):
     """packed dict -> list of (n,2) part arrays (+exterior flags)."""
-    d = pk[1]
     offs = d["offsets"]
     parts = [
         np.column_stack([d["xs"][offs[i] : offs[i + 1]], d["ys"][offs[i] : offs[i + 1]]])
@@ -225,26 +264,49 @@ def _unpack(pk):
      ("multi_line_13_1310_3166.vector.mvt", 13, 1310, 3166)],
 )
 def test_packed_matches_list_api_reference_tiles(name, z, x, y):
+    """iter_layer_packed (the packed projection of the decode core)
+    carries exactly the parts the list API decodes, feature by feature."""
+    from mapnik_vector_tile_spark.operators import decode as D
+
     buf = open(f"{BENCH}/{name}", "rb").read()
     data = Z.decompress(buf)
-    minx, _miny, maxx, maxy = tilemath.tile_mercator_bbox_np(x, y, z)
+    bounds = tilemath.tile_mercator_bbox_np(x, y, z)
+    minx, _miny, maxx, maxy = bounds
     for lb in pbf.decode_tile(data):
         lay = pbf.decode_layer(lb)
         scale = lay["extent"] / (float(maxx) - float(minx))
+        want = []
         for fm in lay["features"]:
             f = pbf.decode_feature_arrays(fm)
             if not len(f["geometry"]):
                 continue
             kw = dict(version=lay["version"], tile_x=float(minx),
                       tile_y=float(maxy), scale_x=scale, scale_y=-scale)
-            pk = Cmd.decode_geometry_vec(f["geometry"], f["type"], packed=True, **kw)
             gl = Cmd.decode_geometry_vec(f["geometry"], f["type"], **kw)
-            assert pk is not None and gl is not None
+            assert gl is not None
+            if gl[0] != "empty":
+                want.append(gl)
+        got = [row[3] for row in D.iter_layer_packed(lb, bounds) if row[3] is not None]
+        assert len(got) == len(want)
+        for pk, gl in zip(got, want):
             parts, _ = _unpack(pk)
             flat_parts = _flat(gl)
             assert len(parts) == len(flat_parts)
             for a, b in zip(parts, flat_parts):
                 assert np.array_equal(a, b)
+
+
+def _packed_one_feature(cmds, gtype, version=2):
+    """One feature through iter_layer_packed under the identity tile
+    transform (tile_x=0, tile_y=4096, scale 1, y flipped) -> its packed
+    dict, or None when the feature decodes empty."""
+    from mapnik_vector_tile_spark.operators import decode as D
+
+    layer = pbf.encode_layer(
+        "l", [pbf.encode_feature(1, [], gtype, cmds)], [], [], version=version
+    )
+    rows = D.iter_layer_packed(layer, (0.0, 0.0, 4096.0, 4096.0))
+    return rows[0][3] if rows else None
 
 
 @settings(max_examples=40, deadline=None)
@@ -255,18 +317,16 @@ def test_packed_matches_list_api_random_polygons(rings):
     gt, cmds = Cmd.encode_geometry(("polygon", arrs), [0, 0])
     if gt is None:
         return
+    kw = dict(version=2, tile_x=0.0, tile_y=4096.0, scale_x=1.0, scale_y=-1.0)
     try:
-        gl = Cmd.decode_geometry_vec(cmds, 3, version=2)
+        gl = Cmd.decode_geometry_vec(cmds, 3, **kw) or Cmd.decode_geometry(cmds, 3, **kw)
     except Cmd.DecodeError:
         with pytest.raises(Cmd.DecodeError):
-            Cmd.decode_geometry_vec(cmds, 3, version=2, packed=True)
+            _packed_one_feature(cmds, 3)
         return
-    pk = Cmd.decode_geometry_vec(cmds, 3, version=2, packed=True)
-    if gl is None or pk is None:
-        assert gl is None and pk is None
-        return
+    pk = _packed_one_feature(cmds, 3)
     if gl[0] == "empty":
-        assert pk[0] == "empty"
+        assert pk is None
         return
     parts, ext = _unpack(pk)
     flat_parts = _flat(gl)
@@ -573,7 +633,7 @@ def _packed_region(n, c, seed=11, feature_ids=None):
 def test_uniform_point_columns_matches_full_decode():
     """The targeted-column lane must return exactly the columns the full
     decode_varints_vec + _packed_rows_ok path produced (it replaced that
-    path in the splitter, the columnar kernel, and decode_point_layer_vec)."""
+    path in the splitter and the columnar kernel)."""
     from mapnik_vector_tile_spark.functions import pbf as P
     from mapnik_vector_tile_spark.operators.decode import _packed_rows_ok
 

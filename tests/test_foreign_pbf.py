@@ -323,22 +323,10 @@ def test_mutation_fuzz_real_tiles_total(seed):
                 assert isinstance(rows, list)
             except (ValueError, Cmd.DecodeError):
                 pass
-            # the packed geometry decoder must be equally total
+            # the packed projection must be equally total
             try:
                 for lb in P.decode_tile(Z2.decompress(data)):
-                    lay = P.decode_layer(lb)
-                    for fm in lay["features"][:50]:
-                        f = P.decode_feature_arrays(fm)
-                        if not len(f["geometry"]):
-                            continue
-                        g = Cmd.decode_geometry_vec(
-                            f["geometry"], f["type"],
-                            version=lay["version"], packed=True,
-                        )
-                        if g is None:
-                            Cmd.decode_geometry(
-                                f["geometry"], f["type"], version=lay["version"]
-                            )
+                    assert isinstance(D.iter_layer_packed(lb, (0.0, 0.0, 1.0, 1.0)), list)
             except (ValueError, Cmd.DecodeError):
                 pass
             # batched parser path must be total as well
