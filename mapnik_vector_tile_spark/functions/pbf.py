@@ -806,11 +806,12 @@ def encode_string_value_fields(strings) -> tuple[np.ndarray, np.ndarray, np.ndar
 
     Per value: 0x22 <varint inner_len> 0x0A <varint str_len> <utf8>.
     Returns (buf uint8, offsets, lengths) — one segment per input string.
-    Uses pyarrow's string buffer layout to avoid per-string Python.
+    Uses pyarrow's string buffer layout to avoid per-string Python;
+    a pyarrow string array is taken as is.
     """
     import pyarrow as pa
 
-    arr = pa.array(strings, type=pa.string())
+    arr = strings if isinstance(strings, pa.Array) else pa.array(strings, type=pa.string())
     if arr.null_count:
         raise ValueError("nulls not allowed here")
     bufs = arr.buffers()

@@ -2,25 +2,35 @@
 
 Replaces the reference's per-tile pull pipeline
 (processor::create_tile -> layer_builder_pbf, src/vector_tile_processor.ipp
-+ src/vector_tile_layer.ipp:84-126) with:
++ src/vector_tile_layer.ipp:84-126) with ONE encode core that every tile
+lane (points, geometries, the salted hot lane, the single-layer
+re-encode) runs through:
 
-  assigned rows --one window shuffle (per-tile counts + row numbers +
-  (z,x,y)-clustered sort)--> cold/hot routing:
+  * one batch driver (_batch_driver): a mapInPandas kernel over a
+    key-sorted stream; tiles straddling Arrow batches carry into the
+    next batch, and declared integer columns are coerced back from the
+    float64 that Arrow->pandas makes of a nullable integer;
+  * one segmenter (_segment) and one value dictionary (_value_dict):
+    per-group first-seen dictionaries for a whole batch, type-qualified
+    and deduplicated across columns on the encoded Value bytes, a null
+    property being a dropped tag (vector_tile_layer.ipp:90-124);
+  * one feature framer (_frame_features): every feature, points
+    included, framed by pbf.encode_features_packed_ragged in one numpy
+    pass, Feature.raster spliced in where rows carry one;
+  * one tile assembler (_encode_layers, _frame_tile): per group, the
+    constant layer prefix/suffix around two byte slices, then zlib;
+    one eject merge (_merge_ejects) folds scalar-lane geometry features
+    back into the batch in row order.
 
-  COLD (size <= hot_threshold): mapInPandas kernel, many tiles per
-  Arrow batch — batch-wide vectorized quantize (std::round semantics,
-  per-row tile origin), segmented per-group first-seen dictionaries
-  (batch-global factorize + first-occurrence ranking, insertion-order
-  parity with vector_tile_layer.ipp:92-124), whole-batch packed feature
-  stream, per-tile assembly = two byte slices + zlib. Tiles straddling
-  Arrow batches carry (as a frame list, no quadratic copy).
+  COLD tiles: many tiles per Arrow batch through the core.
 
   HOT (skewed city-scale tiles — north rule): salted two-phase encode.
-  Phase 1 packs contiguous row-number chunks of a hot tile in parallel
-  tasks (per-occurrence dictionary slots = global stream index, so no
-  cross-chunk dictionary merge); phase 2 concatenates chunk blobs into
-  the layer and compresses (adaptive deflate level for huge layers —
-  the single zlib stream is the only serial stage).
+  Phase 1 packs each salt bucket of a hot tile in parallel tasks
+  (per-occurrence dictionary slots = global index of the non-null
+  property cell, so no cross-bucket dictionary merge); phase 2
+  concatenates bucket blobs into the layer (pre-deflated segments
+  joined into one zlib stream). prechunk_hot=True ships every bucket as
+  its own tile through the cold core instead.
 """
 
 from __future__ import annotations
@@ -29,6 +39,8 @@ import zlib
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
 from mapnik_vector_tile_spark import tilemath
@@ -39,61 +51,215 @@ from mapnik_vector_tile_spark.functions import pbf
 from mapnik_vector_tile_spark.functions import ragged as RG
 
 TILE_SCHEMA = "z int, x long, y long, tile binary, n_features long, n_layers int, painted boolean"
+TILE_COLS = ["z", "x", "y", "tile", "n_features", "n_layers", "painted"]
+TILE_KEYS = ("z", "x", "y")
+_INT_TYPES = ("tinyint", "smallint", "int", "bigint")
 
 
 # ---------------------------------------------------------------------------
-# dictionaries (A1/A2)
+# batch driver + segmenter
 # ---------------------------------------------------------------------------
 
-def build_value_dicts(pdf: pd.DataFrame, prop_cols: list[str],
-                      key_names: list[str] | None = None):
-    """First-seen (row-major, column-within-row) key/value dictionaries —
-    order parity with layer_builder_pbf::add_feature
-    (vector_tile_layer.ipp:84-126). Returns (keys, value_list, tags_array)
-    where tags_array is (n_rows, 2*n_cols) int64 (key_idx, val_idx pairs),
-    with -1 marking dropped nulls. key_names overrides the written key
-    dictionary when the DATA columns were renamed to dodge the tile
-    coordinate columns (a feature property named 'x'/'y'/'z' is legal
-    wire-wise — the reference's linestrings_and_point fixture has one)."""
+def _int_props(df: DataFrame, prop_cols: list[str]) -> list[str]:
+    """Property columns declared integer: Arrow->pandas turns such a
+    column with a null into float64, which would silently retype the
+    Value variant (int 10 -> double 10.0)."""
+    return [
+        f.name for f in df.schema
+        if f.name in prop_cols and f.dataType.simpleString() in _INT_TYPES
+    ]
+
+
+def _batch_driver(process, columns: list[str], keys=TILE_KEYS, int_props=()):
+    """The mapInPandas kernel of every encode lane. The stream is sorted
+    by `keys`; a group straddling Arrow batches carries into the next
+    batch (a frame list, concatenated once at group close), so
+    `process(pdf) -> list[tuple]` always sees whole groups. Declared
+    integer columns come back from float64 as nullable Int64."""
+    keys = list(keys)
+
+    def coerce(pdf: pd.DataFrame) -> pd.DataFrame:
+        fix = {c: pdf[c].astype("Int64") for c in int_props if pdf[c].dtype.kind == "f"}
+        return pdf.assign(**fix) if fix else pdf
+
+    def flush(frames):
+        full = (
+            frames[0].reset_index(drop=True) if len(frames) == 1
+            else pd.concat(frames, ignore_index=True)
+        )
+        rows = process(full)
+        return pd.DataFrame(rows, columns=columns) if rows else None
+
+    def kernel(iterator):
+        carry: list[pd.DataFrame] = []
+        carry_key = None
+        for pdf in iterator:
+            if len(pdf) == 0:
+                continue
+            pdf = coerce(pdf)
+            kv = [pdf[k].to_numpy() for k in keys]
+            if carry:
+                same = np.logical_and.reduce([a == v for a, v in zip(kv, carry_key)])
+                split = len(pdf) if same.all() else int(np.argmin(same))
+                if split:
+                    carry.append(pdf.iloc[:split])
+                if split == len(pdf):
+                    continue  # the whole batch belongs to the carried group
+                out = flush(carry)
+                if out is not None:
+                    yield out
+                pdf = pdf.iloc[split:]
+                kv = [a[split:] for a in kv]
+            carry_key = [a[-1] for a in kv]
+            tail = np.logical_and.reduce([a == v for a, v in zip(kv, carry_key)])
+            n_body = 0 if tail.all() else len(pdf) - int(tail[::-1].argmin())
+            carry = [pdf.iloc[n_body:]]
+            if n_body:
+                out = flush([pdf.iloc[:n_body]])
+                if out is not None:
+                    yield out
+        if carry:
+            out = flush(carry)
+            if out is not None:
+                yield out
+
+    return kernel
+
+
+def _segment(pdf: pd.DataFrame, keys=TILE_KEYS):
+    """Group ids over a key-sorted batch -> (gid (n,), group_start (G,))."""
     n = len(pdf)
-    ncols = len(prop_cols)
-    keys = list(key_names or prop_cols)  # key dict = column order (fixed schema)
-    val_index: dict[tuple, int] = {}
-    values: list = []
-    tags = np.full((n, 2 * ncols), -1, dtype=np.int64)
-    col_codes = []
-    col_uniques = []
-    for c in prop_cols:
-        codes, uniques = pd.factorize(pdf[c], use_na_sentinel=True)
-        col_codes.append(codes)
-        col_uniques.append(list(uniques))
-    # first occurrence rank of each (col, code): row*ncols + col (vectorized)
-    order = []
-    for j in range(ncols):
-        codes = col_codes[j]
-        valid = codes >= 0
-        uniq, first_idx = np.unique(codes[valid], return_index=True)
-        rows_idx = np.nonzero(valid)[0][first_idx]
-        order.extend(zip((rows_idx * ncols + j).tolist(), [j] * len(uniq), uniq.tolist()))
-    order.sort()
-    slot_of: dict[tuple[int, int], int] = {}
-    for _rank, j, code in order:
-        v = col_uniques[j][code]
-        tagged = (pbf.value_type_tag(v), v)
-        if tagged not in val_index:
-            val_index[tagged] = len(values)
-            values.append(v)
-        slot_of[(j, code)] = val_index[tagged]
-    for j in range(ncols):
-        codes = col_codes[j]
-        valid = codes >= 0
-        tags[valid, 2 * j] = j
-        tags[valid, 2 * j + 1] = [slot_of[(j, c)] for c in codes[valid]]
-    return keys, values, tags
+    change = np.zeros(n, dtype=bool)
+    if n:
+        change[0] = True
+    for k in keys:
+        a = pdf[k].to_numpy()
+        change[1:] |= a[1:] != a[:-1]
+    return np.cumsum(change) - 1, np.flatnonzero(change)
 
 
 # ---------------------------------------------------------------------------
-# batch-wide vectorized quantization
+# value dictionary (A1/A2)
+# ---------------------------------------------------------------------------
+
+def _value_field_bytes(v) -> bytes:
+    enc = pbf.encode_value(v)
+    head = bytearray()
+    pbf.write_varint(head, pbf.tag(4, pbf.WT_LEN))
+    pbf.write_varint(head, len(enc))
+    return bytes(head) + enc
+
+
+def _column_fields(s: pd.Series):
+    """One property column -> (codes (n,) int64, -1 = null; the
+    contiguous Layer.values field bytes of its distinct values, and
+    their lengths). String columns stay in Arrow end to end."""
+    if s.dtype == object:
+        try:
+            enc = pc.dictionary_encode(pa.array(s, type=pa.string(), from_pandas=True))
+        except (pa.ArrowTypeError, pa.ArrowInvalid):
+            enc = None
+        if enc is not None:
+            codes = enc.indices.fill_null(-1).to_numpy(zero_copy_only=False)
+            buf, _off, lens = pbf.encode_string_value_fields(enc.dictionary)
+            return codes.astype(np.int64), buf, lens
+        # mixed Python values: pandas equates 1, 1.0 and True, so the
+        # factorize key carries the Value type
+        typed = pd.Series(
+            [None if pd.isna(v) else (pbf.value_type_tag(v), v) for v in s],
+            dtype=object,
+        )
+        codes, uniques = pd.factorize(typed, use_na_sentinel=True)
+        values = [u[1] for u in uniques]
+    else:
+        codes, uniques = pd.factorize(s, use_na_sentinel=True)
+        values = list(uniques)
+    pieces = [_value_field_bytes(v) for v in values]
+    lens = np.fromiter(map(len, pieces), dtype=np.int64, count=len(pieces))
+    return codes.astype(np.int64), np.frombuffer(b"".join(pieces), dtype=np.uint8), lens
+
+
+def _value_fields(pdf: pd.DataFrame, prop_cols: list[str]):
+    """Every property cell's Value, deduplicated across columns on its
+    encoded field bytes — the type-qualified identity of
+    vector_tile_layer.hpp:36-69 (int 1, bool true and float 1.0 stay
+    distinct; equal typed values share one entry whatever the column).
+
+    Returns (vid (n, c) int64, -1 where the property is null, and the
+    (buf, off, len) field bytes of each distinct value)."""
+    n, c = len(pdf), len(prop_cols)
+    vid = np.full((n, c), -1, dtype=np.int64)
+    if c == 0:
+        empty = np.empty(0, dtype=np.int64)
+        return vid, np.empty(0, dtype=np.uint8), empty, empty
+    bufs, lens = [], []
+    base = 0
+    for j, col in enumerate(prop_cols):
+        codes, buf, ln = _column_fields(pdf[col])
+        vid[:, j] = np.where(codes >= 0, codes + base, -1)
+        bufs.append(buf)
+        lens.append(ln)
+        base += len(ln)
+    ends = np.cumsum(np.concatenate(lens))
+    fields = pa.Array.from_buffers(
+        pa.large_binary(), base,
+        [None, pa.py_buffer(np.concatenate([[0], ends]).astype(np.int64)),
+         pa.py_buffer(np.concatenate(bufs))],
+    )
+    enc = pc.dictionary_encode(fields)
+    valid = vid >= 0
+    vid[valid] = enc.indices.to_numpy()[vid[valid]]
+    d = enc.dictionary
+    if len(d) == 0:  # every cell null
+        return vid, np.empty(0, dtype=np.uint8), *([np.empty(0, dtype=np.int64)] * 2)
+    doff = np.frombuffer(d.buffers()[1], dtype=np.int64)[d.offset : d.offset + len(d) + 1]
+    data = d.buffers()[2]
+    dbuf = np.frombuffer(data, dtype=np.uint8) if data is not None else np.empty(0, np.uint8)
+    return vid, dbuf, doff[:-1], np.diff(doff)
+
+
+def _tag_pairs(n: int, c: int, rows, cols, slots) -> np.ndarray:
+    """(n, 2c) Feature.tags matrix: (key, value) index pairs of the
+    non-null cells (rows, cols) — column order is key order — and -1
+    where a null drops the pair."""
+    tags = np.full((n, 2 * c), -1, dtype=np.int64)
+    tags[rows, 2 * cols] = cols
+    tags[rows, 2 * cols + 1] = slots
+    return tags
+
+
+def _value_dict(pdf: pd.DataFrame, prop_cols: list[str], gid: np.ndarray, n_groups: int):
+    """Per-group first-seen value dictionaries for a whole sorted batch:
+    insertion order is row-major, column-within-row, over non-null
+    cells (layer_builder_pbf::add_feature, vector_tile_layer.ipp:84-126).
+
+    Returns (tags (n, 2c) int64 — (key, value) index pairs, -1 where a
+    null drops the pair; the values bytes of every group in order; and
+    (G+1,) byte offsets: group g's Layer.values fields are
+    values[off[g]:off[g+1]])."""
+    vid, vbuf, voff, vlen = _value_fields(pdf, prop_cols)
+    n, c = vid.shape
+    rows, cols = np.nonzero(vid >= 0)  # row-major = insertion order
+    ent_gid, ent_vid = gid[rows], vid[rows, cols]
+    # stable: each (group, value) run starts at its first occurrence
+    order = np.lexsort((ent_vid, ent_gid))
+    sg, sv = ent_gid[order], ent_vid[order]
+    first = np.ones(len(order), dtype=bool)
+    first[1:] = (sg[1:] != sg[:-1]) | (sv[1:] != sv[:-1])
+    ins = np.argsort(order[first], kind="stable")  # entries in insertion order
+    dict_off = np.searchsorted(sg[first][ins], np.arange(n_groups + 1))
+    rank = np.empty(len(ins), dtype=np.int64)
+    rank[ins] = np.arange(len(ins))
+    slot = rank - dict_off[sg[first]]
+    ent_slot = np.empty(len(order), dtype=np.int64)
+    ent_slot[order] = slot[np.cumsum(first) - 1]
+    tags = _tag_pairs(n, c, rows, cols, ent_slot)
+    values, val_off = pbf.ragged_gather(vbuf, voff, vlen, sv[first][ins])
+    return tags, values.tobytes(), val_off[dict_off]
+
+
+# ---------------------------------------------------------------------------
+# feature framer + tile assembler
 # ---------------------------------------------------------------------------
 
 def _quantize_batch(pdf: pd.DataFrame, extent: int, buffer_px: int):
@@ -118,230 +284,160 @@ def _quantize_batch(pdf: pd.DataFrame, extent: int, buffer_px: int):
     return px.astype(np.int64), py.astype(np.int64), ok
 
 
-# ---------------------------------------------------------------------------
-# group lane
-# ---------------------------------------------------------------------------
+def _point_features(rows: np.ndarray, px: np.ndarray, py: np.ndarray):
+    """Point features of `rows` as (rows, gtypes, cmds, cmd counts): one
+    MoveTo each, [9, zigzag(x), zigzag(y)]."""
+    n = len(rows)
+    cmds = np.column_stack([
+        np.full(n, 9, dtype=np.uint64),
+        Cmd.zigzag32(px).astype(np.uint64),
+        Cmd.zigzag32(py).astype(np.uint64),
+    ]).reshape(-1)
+    return rows, np.full(n, Cmd.POINT, dtype=np.int64), cmds, np.full(n, 3, dtype=np.int64)
 
-def _encode_group_prequantized(
-    pdf: pd.DataFrame,
-    layer_name: str,
-    prop_cols: list[str],
-    extent: int,
-    version: int,
-    raster_col: str | None,
-) -> tuple[bytes, int]:
-    keys, values, tags = build_value_dicts(pdf, prop_cols)
-    vals = [pbf.encode_value(v) for v in values]
-    zz = np.column_stack(
-        [Cmd.zigzag32(pdf["_px"].to_numpy()), Cmd.zigzag32(pdf["_py"].to_numpy())]
+
+def _merge_ejects(feats, scalar: list[tuple]):
+    """Vectorized features plus the scalar lane's [(row, gtype, cmds)]
+    -> one feature set in row order (a collection row keeps its members
+    in order)."""
+    if not scalar:
+        return feats
+    rows, gtypes, cmds, clens = feats
+    s_rows, s_gtypes, s_cmds = zip(*scalar)
+    pieces = np.split(cmds, np.cumsum(clens)[:-1]) if len(clens) else []
+    pieces += [np.asarray(c, dtype=np.uint64) for c in s_cmds]
+    rows_all = np.concatenate([rows, np.asarray(s_rows, dtype=np.int64)])
+    order = np.argsort(rows_all, kind="stable")
+    cmd_list = [pieces[j] for j in order]
+    return (
+        rows_all[order],
+        np.concatenate([gtypes, np.asarray(s_gtypes, dtype=np.int64)])[order],
+        np.concatenate(cmd_list).astype(np.uint64),
+        np.array([len(c) for c in cmd_list], dtype=np.int64),
     )
-    rasters = pdf[raster_col] if raster_col else None
-    if rasters is None and (tags >= 0).all():
-        blob = pbf.encode_point_features_packed(tags, zz)
-        layer = pbf.encode_layer_packed(
-            layer_name, blob, keys, vals, extent=extent, version=version
+
+
+def _frame_features(feats, tags: np.ndarray, ids=None, rasters=None):
+    """Layer.features frames of a batch in one numpy pass. feats =
+    (rows, gtypes, cmds, cmd counts), rows nondecreasing; each feature
+    takes its row's non-null tag pairs and id. Returns (blob, frame
+    byte offsets (F+1,), frame rows (F,))."""
+    rows, gtypes, cmds, clens = feats
+    kt = tags[rows]
+    km = kt >= 0
+    blob, flens = pbf.encode_features_packed_ragged(
+        gtypes, cmds, clens, kt[km], km.sum(axis=1),
+        None if ids is None else ids[rows].astype(np.int64),
+        return_lengths=True,
+    )
+    if rasters is not None:
+        blob, flens, rows = _splice_raster_frames(blob, flens, feats, tags, ids, rasters)
+    return blob, np.concatenate([[0], np.cumsum(flens)]).astype(np.int64), rows
+
+
+def _splice_raster_frames(blob, flens, feats, tags, ids, rasters):
+    """Weave Feature.raster bytes into the batch-framed blob: frames of
+    raster-bearing rows are rebuilt by the scalar writer (field order
+    id, tags, type, geometry, raster — matching encode_feature and the
+    reference's raster_to_feature), raster-only rows (no surviving
+    geometry) are inserted at their original row position as
+    geometry-less UNKNOWN-type features. A collection row's raster
+    attaches to its FIRST member feature only. Returns (blob, frame
+    lengths, frame rows)."""
+    feat_rows, gtypes, cmds, clens = feats
+    frame_off = np.concatenate([[0], np.cumsum(flens)]).astype(np.int64)
+    cmd_pieces = np.split(cmds, np.cumsum(clens)[:-1]) if len(clens) else []
+    geom_rows = set(feat_rows.tolist())
+    extra = [i for i, r in enumerate(rasters) if r is not None and i not in geom_rows]
+
+    def raster_frame(row: int, gtype: int, geom) -> bytes:
+        trow = tags[row]
+        msg = pbf.encode_feature(
+            int(ids[row]) if ids is not None else None,
+            [int(t) for t in trow[trow >= 0]],
+            gtype,
+            [int(c) for c in geom],
+            raster=bytes(rasters[row]),
         )
-        return layer, len(pdf)
-    feats = []
-    for i in range(len(pdf)):
-        trow = tags[i]
-        tag_list = [int(t) for t in trow[trow >= 0]]
-        r = rasters.iloc[i] if rasters is not None else None
-        feats.append(
-            pbf.encode_feature(
-                None, tag_list, Cmd.POINT,
-                [9, int(zz[i, 0]), int(zz[i, 1])],
-                raster=bytes(r) if r is not None else None,
-            )
-        )
-    layer = pbf.encode_layer(layer_name, feats, keys, vals, extent=extent, version=version)
-    return layer, len(feats)
+        framed = bytearray()
+        pbf.add_len_field(framed, 2, msg)  # Layer.features framing
+        return bytes(framed)
+
+    pieces: list[bytes] = []
+    out_rows: list[int] = []
+    gi = ei = 0
+    prev_row = -1
+    while gi < len(feat_rows) or ei < len(extra):
+        if gi >= len(feat_rows) or (ei < len(extra) and extra[ei] < int(feat_rows[gi])):
+            pieces.append(raster_frame(extra[ei], 0, []))
+            out_rows.append(extra[ei])
+            ei += 1
+            continue
+        row = int(feat_rows[gi])
+        if rasters[row] is not None and row != prev_row:
+            pieces.append(raster_frame(row, int(gtypes[gi]), cmd_pieces[gi]))
+        else:
+            pieces.append(blob[frame_off[gi] : frame_off[gi + 1]])
+        out_rows.append(row)
+        prev_row = row
+        gi += 1
+    lens = np.fromiter(map(len, pieces), dtype=np.int64, count=len(pieces))
+    return b"".join(pieces), lens, np.asarray(out_rows, dtype=np.int64)
 
 
-def _value_field_bytes(v) -> bytes:
-    enc = pbf.encode_value(v)
-    head = bytearray()
-    pbf.write_varint(head, pbf.tag(4, pbf.WT_LEN))
-    pbf.write_varint(head, len(enc))
-    return bytes(head) + enc
-
-
-# ---------------------------------------------------------------------------
-# segmented vectorized lane: all tiles of a batch at once
-# ---------------------------------------------------------------------------
-
-def _segmented_value_dicts(pdf, prop_cols, gid, local_row, n_groups):
-    """Per-GROUP first-seen value dictionaries for a whole sorted batch
-    (batch-global factorize + segmented first-occurrence ranking —
-    insertion-order parity with vector_tile_layer.ipp:92-124).
-
-    Returns None when any property value is null (callers fall back to
-    the per-group lane), else (tags (n,2c) int64, gathered_bytes,
-    gat_off, dict_off): group g's values blob is
-    gathered_bytes[gat_off[dict_off[g]] : gat_off[dict_off[g+1]]].
-
-    NOTE (documented deviation): identical values appearing in
-    *different columns* each get their own dictionary slot here —
-    decoded properties are identical, the tile is just a few bytes
-    larger in that rare case. Within a column dedup is exact."""
-    n = len(pdf)
-    c = len(prop_cols)
-    col_codes = []
-    col_base = []
-    bufs: list[np.ndarray] = []
-    offs: list[np.ndarray] = []
-    lens: list[np.ndarray] = []
-    base = 0
-    buf_bytes = 0
-    for col in prop_cols:
-        codes, uniques = pd.factorize(pdf[col], use_na_sentinel=True)
-        if (codes < 0).any():
-            return None
-        uniques = list(uniques)
-        try:
-            b, o, l = pbf.encode_string_value_fields(uniques)
-        except Exception:  # non-string column -> scalar value encoding
-            pieces = [_value_field_bytes(v) for v in uniques]
-            b = np.frombuffer(b"".join(pieces), dtype=np.uint8)
-            l = np.array([len(p) for p in pieces], dtype=np.int64)
-            o = np.concatenate([[0], np.cumsum(l)[:-1]]).astype(np.int64)
-        col_codes.append(codes)
-        col_base.append(base)
-        bufs.append(b)
-        offs.append(o + buf_bytes)
-        lens.append(l)
-        base += len(uniques)
-        buf_bytes += len(b)
-    val_buf = np.concatenate(bufs) if bufs else np.empty(0, np.uint8)
-    val_off = np.concatenate(offs) if offs else np.empty(0, np.int64)
-    val_len = np.concatenate(lens) if lens else np.empty(0, np.int64)
-
-    U = max(base, 1)
-    # entry stream: (gid, gvid, stream_pos) for every row x column
-    ent_gid = np.tile(gid, c)
-    ent_gvid = np.concatenate([col_base[j] + col_codes[j] for j in range(c)]) \
-        if c else np.empty(0, np.int64)
-    ent_stream = np.concatenate([local_row * c + j for j in range(c)]) \
-        if c else np.empty(0, np.int64)
-
-    # first occurrence of each (gid, gvid): sort by (gid, gvid, stream)
-    order1 = np.lexsort((ent_stream, ent_gvid, ent_gid))
-    sg, sv, ss = ent_gid[order1], ent_gvid[order1], ent_stream[order1]
-    first = np.empty(len(sg), dtype=bool)
-    if len(sg):
-        first[0] = True
-        first[1:] = (sg[1:] != sg[:-1]) | (sv[1:] != sv[:-1])
-    dict_gid, dict_gvid, dict_stream = sg[first], sv[first], ss[first]
-    # slots: rank by stream within group
-    order2 = np.lexsort((dict_stream, dict_gid))
-    dg, dv = dict_gid[order2], dict_gvid[order2]
-    grp_change = np.empty(len(dg), dtype=bool)
-    if len(dg):
-        grp_change[0] = True
-        grp_change[1:] = dg[1:] != dg[:-1]
-    slot_rank = np.arange(len(dg)) - np.maximum.accumulate(
-        np.where(grp_change, np.arange(len(dg)), 0)
-    )
-    # lookup (gid, gvid) -> slot via sorted combined key
-    key_sorted = dg.astype(np.int64) * U + dv
-    key_order = np.argsort(key_sorted, kind="stable")
-    key_sorted_sorted = key_sorted[key_order]
-    slot_sorted = slot_rank[key_order]
-    ent_key = ent_gid.astype(np.int64) * U + ent_gvid
-    pos = np.searchsorted(key_sorted_sorted, ent_key)
-    ent_slot = slot_sorted[pos]
-
-    tags = np.empty((n, 2 * c), dtype=np.int64)
-    for j in range(c):
-        tags[:, 2 * j] = j
-        tags[:, 2 * j + 1] = ent_slot[j * n : (j + 1) * n]
-
-    # per-group values blob: dict entries (dg, dv) are sorted by
-    # (group, slot) — exactly layer insertion order
-    dict_counts = np.bincount(dg, minlength=n_groups)
-    dict_off = np.concatenate([[0], np.cumsum(dict_counts)])
-    gathered, gat_off = pbf.ragged_gather(val_buf, val_off, val_len, dv)
-    return tags, gathered.tobytes(), gat_off, dict_off
-
-
-def _encode_tiles_segmented(
-    pdf: pd.DataFrame,
-    layer_name: str,
-    prop_cols: list[str],
-    extent: int,
-    version: int,
-    compress_tiles: bool,
-) -> list[tuple]:
-    """Encode every (z,x,y) group of a sorted batch without per-group
-    pandas work. Per-group first-seen dictionaries are computed with
-    batch-global factorize + a segmented first-occurrence ranking, the
-    feature stream is packed once for the whole batch, and per-group
-    assembly is a couple of byte slices + zlib.
-
-    Requires: rows sorted by (z,x,y); columns _px/_py present; no raster.
-    Null property values fall back to the caller's group lane.
-    """
-    n = len(pdf)
-    c = len(prop_cols)
-    # group ids over the sorted batch
-    zxy = np.column_stack(
-        [pdf["z"].to_numpy(np.int64), pdf["x"].to_numpy(np.int64), pdf["y"].to_numpy(np.int64)]
-    )
-    change = np.empty(n, dtype=bool)
-    change[0] = True
-    change[1:] = (zxy[1:] != zxy[:-1]).any(axis=1)
-    gid = np.cumsum(change) - 1
-    n_groups = int(gid[-1]) + 1
-    group_start = np.flatnonzero(change)
-    group_rows = np.diff(np.append(group_start, n))
-    local_row = np.arange(n) - group_start[gid]
-
-    dicts = _segmented_value_dicts(pdf, prop_cols, gid, local_row, n_groups)
-    if dicts is None:
-        return []  # caller falls back to the group lane
-    tags, gathered_b, gat_off, dict_off = dicts
-
-    zz = np.column_stack(
-        [Cmd.zigzag32(pdf["_px"].to_numpy()), Cmd.zigzag32(pdf["_py"].to_numpy())]
-    )
-    blob, flens = pbf.encode_point_features_packed(tags, zz, return_lengths=True)
-    feat_off = np.concatenate([[0], np.cumsum(flens)])
-
-    # constant layer pieces
+def _layer_prefix_suffix(layer_name: str, keys: list[str], extent: int, version: int):
+    """The constant layer pieces around a group's values and features:
+    name + keys | extent + version (extent/version precede the features
+    so the features region is a pure suffix of the layer)."""
     prefix = bytearray()
     pbf.add_len_field(prefix, 1, layer_name.encode("utf-8"))
-    for k in prop_cols:
+    for k in keys:
         pbf.add_len_field(prefix, 3, k.encode("utf-8"))
-    prefix = bytes(prefix)
     suffix = bytearray()
     pbf.add_varint_field(suffix, 5, extent)
     pbf.add_varint_field(suffix, 15, version)
-    suffix = bytes(suffix)
+    return bytes(prefix), bytes(suffix)
 
-    zs = zxy[group_start, 0]
-    xs = zxy[group_start, 1]
-    ys = zxy[group_start, 2]
-    fs = feat_off[group_start]
-    fe = feat_off[np.append(group_start[1:], n)]
-    out: list[tuple] = []
-    compress = Z.compress  # small-payload fast path (functions.compression)
+
+def _tile_head(layer_len: int) -> bytes:
+    """Tile.layers (field 3) header of a layer of `layer_len` bytes."""
+    head = bytearray()
+    pbf.write_varint(head, pbf.tag(3, pbf.WT_LEN))
+    pbf.write_varint(head, layer_len)
+    return bytes(head)
+
+
+def _frame_tile(layer: bytes, compress_tiles: bool) -> bytes:
+    """One-layer tile, zlib'd when asked."""
+    tile = _tile_head(len(layer)) + layer
+    return Z.compress(tile) if compress_tiles else tile
+
+
+def _encode_layers(pdf, gid, n_groups, prop_cols, feats, prefix, suffix,
+                   ids=None, rasters=None) -> list[tuple[bytes, int]]:
+    """The core for every group of a sorted batch: one value dictionary,
+    one framer pass, then per group prefix + values + suffix + features
+    (two byte slices). Returns (layer bytes, n features) per group, b""
+    for a group with no feature."""
+    tags, values, val_off = _value_dict(pdf, prop_cols, gid, n_groups)
+    blob, frame_off, frame_rows = _frame_features(feats, tags, ids, rasters)
+    bounds = np.searchsorted(gid[frame_rows], np.arange(n_groups + 1))
+    out = []
     for g in range(n_groups):
-        vals = gathered_b[gat_off[dict_off[g]] : gat_off[dict_off[g + 1]]]
-        layer = prefix + vals + suffix + blob[fs[g] : fe[g]]
-        head = bytearray()
-        pbf.write_varint(head, pbf.tag(3, pbf.WT_LEN))
-        pbf.write_varint(head, len(layer))
-        tile = bytes(head) + layer
-        if compress_tiles:
-            tile = compress(tile, 6)
-        out.append(
-            (int(zs[g]), int(xs[g]), int(ys[g]), tile, int(group_rows[g]), 1, True)
-        )
+        lo, hi = bounds[g], bounds[g + 1]
+        if lo == hi:
+            out.append((b"", 0))
+            continue
+        out.append((
+            prefix + values[val_off[g] : val_off[g + 1]] + suffix
+            + blob[frame_off[lo] : frame_off[hi]],
+            int(hi - lo),
+        ))
     return out
 
 
 # ---------------------------------------------------------------------------
-# public API
+# geometry lane
 # ---------------------------------------------------------------------------
 
 def _scalar_geom_feature(geom, vt, clip_box, simplify_distance,
@@ -394,140 +490,82 @@ def _scalar_geom_feature(geom, vt, clip_box, simplify_distance,
     return out
 
 
-def _encode_geom_tiles_segmented(
+def _encode_geom_groups(
     pdf: pd.DataFrame,
+    gid: np.ndarray,
+    tiles: tuple,
     layer_name: str,
     prop_cols: list[str],
-    extent: int,
-    buffer_px: int,
-    simplify_distance: float,
-    area_threshold: float,
-    geom_col: str,
-    compress_tiles: bool,
+    key_names: list[str] | None = None,
+    extent: int = 4096,
+    buffer_px: int = 0,
+    simplify_distance: float = 0.0,
+    area_threshold: float = 0.1,
     version: int = 2,
     fill_type: str = "even_odd",
     strictly_simple: bool = False,
-    key_names: list[str] | None = None,
-) -> list[tuple] | None:
-    """Encode every (z,x,y) geometry group of a sorted batch through ONE
-    ragged kernel invocation (functions/ragged.py) — the geometry
-    sibling of _encode_tiles_segmented. Per-feature tile transforms feed
-    the batch quantize; per-group assembly is dictionary-blob + feature
-    byte-range slices + zlib. Returns rows
-    (z, x, y, tile, n_features, n_layers, painted, n_unresolved),
-    or None when a property value is null (per-group fallback)."""
-    n = len(pdf)
-    if n == 0:
-        return []
-    zxy = np.column_stack(
-        [pdf["z"].to_numpy(np.int64), pdf["x"].to_numpy(np.int64), pdf["y"].to_numpy(np.int64)]
-    )
-    change = np.empty(n, dtype=bool)
-    change[0] = True
-    change[1:] = (zxy[1:] != zxy[:-1]).any(axis=1)
-    gid = np.cumsum(change) - 1
-    n_groups = int(gid[-1]) + 1
-    group_start = np.flatnonzero(change)
-    local_row = np.arange(n) - group_start[gid]
+    multi_polygon_union: bool = False,
+    process_all_rings: bool = False,
+    ids: np.ndarray | None = None,
+    rasters: list | None = None,
+):
+    """The batch geometry encoder: every group of a sorted batch (group
+    g is the tile (tiles[0][g], tiles[1][g], tiles[2][g])) through ONE
+    ragged kernel invocation over the `_gpk` column (functions/ragged.py,
+    the fused vectorized twin of the reference's per-feature visitor
+    chain, src/vector_tile_processor.ipp:82-174), then the encode core.
+    Rare complex features (geometry collections, fill-resolver polygons)
+    come back as ejects and run the scalar pipeline; with the
+    non-default wagyu knobs (multi_polygon_union / process_all_rings,
+    which the ragged lane does not model) every feature ejects.
 
-    dicts = _segmented_value_dicts(pdf, prop_cols, gid, local_row, n_groups)
-    if dicts is None:
-        return None
-    tags, gathered_b, gat_off, dict_off = dicts
-
-    # per-group view transforms (exact tile_mercator_bbox_np math so the
-    # quantization is bit-identical to the per-tile lane)
-    gz, gx, gy = zxy[group_start, 0], zxy[group_start, 1], zxy[group_start, 2]
-    minxg, minyg, maxxg, maxyg = tilemath.tile_mercator_bbox_np(gx, gy, gz)
-    sxg = extent / (maxxg - minxg)
-    syg = extent / (maxyg - minyg)
+    Returns ([(layer bytes, n features)] per group, fill-resolver budget
+    overruns per group)."""
+    gz, gx, gy = (np.asarray(t, dtype=np.int64) for t in tiles)
+    n_groups = len(gz)
+    minx, miny, maxx, maxy = tilemath.tile_mercator_bbox_np(gx, gy, gz)
+    sx, sy = extent / (maxx - minx), extent / (maxy - miny)
     clip_box = tilemath.buffered_tile_px_box(extent, buffer_px)
-
-    blobs = pdf[geom_col].to_numpy()
+    blobs = pdf["_gpk"].to_numpy()
     stats: dict = {}
-    feat_rows, gtypes_v, cmds_flat, clens, ejects = RG.encode_batch_gpack(
-        blobs, (minxg[gid], maxyg[gid], sxg[gid], syg[gid]), clip_box,
-        simplify_distance, area_threshold, stats,
-        force_resolve=strictly_simple,
-    )
-    if ejects:
-        s_rows: list[int] = []
-        s_gtypes: list[int] = []
-        s_cmds: list[np.ndarray] = []
-        for i in ejects:
-            g = gid[i]
-            vt_i = G.ViewTransform(
-                float(minxg[g]), float(minyg[g]), float(maxxg[g]),
-                float(maxyg[g]), extent, extent,
-            )
-            st_i: dict = {}
-            encoded = _scalar_geom_feature(
-                G.gunpack(bytes(blobs[i])), vt_i, clip_box,
-                simplify_distance, area_threshold, st_i,
-                fill_type=fill_type, strictly_simple=strictly_simple,
-            )
-            ov = st_i.get("budget_exceeded", 0)
-            if ov:
-                stats["budget_exceeded"] = stats.get("budget_exceeded", 0) + ov
-                stats.setdefault("budget_exceeded_feats", []).extend([i] * ov)
-            for gtype, cmds in encoded:  # collections: one feature/member
-                s_rows.append(i)
-                s_gtypes.append(gtype)
-                s_cmds.append(np.asarray(cmds, dtype=np.uint64))
-        if s_rows:
-            pieces = np.split(cmds_flat, np.cumsum(clens)[:-1]) if len(clens) else []
-            rows_all = np.concatenate([feat_rows, np.asarray(s_rows, dtype=np.int64)])
-            order = np.argsort(rows_all, kind="stable")
-            all_cmds = pieces + s_cmds
-            all_gtypes = np.concatenate(
-                [gtypes_v, np.asarray(s_gtypes, dtype=np.int64)]
-            )
-            feat_rows = rows_all[order]
-            gtypes_v = all_gtypes[order]
-            cmd_list = [all_cmds[j] for j in order]
-            cmds_flat = np.concatenate(cmd_list)
-            clens = np.array([len(c) for c in cmd_list], dtype=np.int64)
-
-    unresolved = np.zeros(n_groups, dtype=np.int64)
-    for f in stats.get("budget_exceeded_feats", []):
-        unresolved[gid[f]] += 1
-
-    # feature framing for the whole batch; per-group = byte-range slice
-    if len(feat_rows):
-        kt = tags[feat_rows]
-        blob, flens = pbf.encode_features_packed_ragged(
-            gtypes_v, cmds_flat, clens,
-            kt.reshape(-1), np.full(len(feat_rows), kt.shape[1], dtype=np.int64),
-            None, return_lengths=True,
-        )
-        feat_gid = gid[feat_rows]
-        fo = np.concatenate([[0], np.cumsum(flens)])
-        g_lo = np.searchsorted(feat_gid, np.arange(n_groups), side="left")
-        g_hi = np.searchsorted(feat_gid, np.arange(n_groups), side="right")
+    if multi_polygon_union or process_all_rings:
+        feats = (np.empty(0, np.int64), np.empty(0, np.int64),
+                 np.empty(0, np.uint64), np.empty(0, np.int64))
+        ejects = range(len(pdf))
     else:
-        blob = b""
-        fo = np.zeros(1, dtype=np.int64)
-        g_lo = g_hi = np.zeros(n_groups, dtype=np.int64)
-
+        # per-feature tile transforms: exact tile_mercator_bbox_np math,
+        # bit-identical to the scalar lane's ViewTransform
+        *feats, ejects = RG.encode_batch_gpack(
+            blobs, (minx[gid], maxy[gid], sx[gid], sy[gid]), clip_box,
+            simplify_distance, area_threshold, stats,
+            force_resolve=strictly_simple,
+        )
+    scalar: list[tuple] = []
+    for i in ejects:
+        g = gid[i]
+        vt = G.ViewTransform(float(minx[g]), float(miny[g]), float(maxx[g]),
+                             float(maxy[g]), extent, extent)
+        st: dict = {}
+        for gtype, cmds in _scalar_geom_feature(
+            G.gunpack(bytes(blobs[i])), vt, clip_box, simplify_distance,
+            area_threshold, st, fill_type=fill_type,
+            strictly_simple=strictly_simple,
+            multi_polygon_union=multi_polygon_union,
+            process_all_rings=process_all_rings,
+        ):  # collections: one wire feature per member
+            scalar.append((i, gtype, cmds))
+        stats.setdefault("budget_exceeded_feats", []).extend(
+            [i] * st.get("budget_exceeded", 0)
+        )
+    feats = _merge_ejects(tuple(feats), scalar)
+    over = np.asarray(stats.get("budget_exceeded_feats", []), dtype=np.int64)
+    unresolved = np.bincount(gid[over], minlength=n_groups)
     prefix, suffix = _layer_prefix_suffix(
         layer_name, key_names or prop_cols, extent, version
     )
-    out: list[tuple] = []
-    compress = Z.compress
-    for g in range(n_groups):
-        nf = int(g_hi[g] - g_lo[g])
-        if nf == 0:
-            out.append((int(gz[g]), int(gx[g]), int(gy[g]), b"", 0, 0, False,
-                        int(unresolved[g])))
-            continue
-        vals = gathered_b[gat_off[dict_off[g]] : gat_off[dict_off[g + 1]]]
-        layer = prefix + vals + suffix + blob[fo[g_lo[g]] : fo[g_hi[g]]]
-        tile = pbf.encode_tile([layer])
-        if compress_tiles:
-            tile = compress(tile)
-        out.append((int(gz[g]), int(gx[g]), int(gy[g]), tile, nf, 1, True,
-                    int(unresolved[g])))
-    return out
+    layers = _encode_layers(pdf, gid, n_groups, prop_cols, feats, prefix, suffix,
+                            ids=ids, rasters=rasters)
+    return layers, unresolved
 
 
 def encode_geom_layer(
@@ -537,14 +575,12 @@ def encode_geom_layer(
     y: int,
     layer_name: str,
     prop_cols: list[str],
-    wkt_col: str = "geom_wkt",
     extent: int = 4096,
     buffer_px: int = 0,
     simplify_distance: float = 0.0,
     area_threshold: float = 0.1,
     id_col: str | None = None,
     version: int = 2,
-    geom_col: str | None = None,
     stats: dict | None = None,
     fill_type: str = "even_odd",
     strictly_simple: bool = False,
@@ -553,175 +589,62 @@ def encode_geom_layer(
     key_names: list[str] | None = None,
     raster_col: str | None = None,
 ) -> tuple[bytes, int]:
-    """General-geometry layer through the fused transform/simplify/clip
-    kernel, then ONE ragged batch command-stream + feature framing pass
-    (pbf.encode_features_packed_ragged) — no per-feature pbf writer.
-    geom_col: compact packed geometry (geometry.gpack) — preferred; the
-    WKT column is parsed only when no packed column is present.
-    stats: optional dict accumulating fill-resolver budget_exceeded.
-    raster_col: Feature.raster bytes per row (the re-encode merge path,
-    raster_to_feature semantics — vector_tile_geometry_feature.hpp:23-34):
-    raster-bearing rows keep their geometry AND raster; rows with
-    raster but no surviving geometry are written as geometry-less
-    raster features (type UNKNOWN), like the reference's raster
-    features."""
-    minx, miny, maxx, maxy = tilemath.tile_mercator_bbox_np(x, y, z)
-    vt = G.ViewTransform(float(minx), float(miny), float(maxx), float(maxy), extent, extent)
-    clip_box = tilemath.buffered_tile_px_box(extent, buffer_px)
-    keys, values, tags = build_value_dicts(pdf, prop_cols, key_names)
-    ids = pdf[id_col].to_numpy() if id_col else None
+    """One general-geometry layer: the batch geometry encoder applied to
+    the single tile (z, x, y), its geometry the compact packed `_gpk`
+    column (geometry.gpack). stats: optional dict accumulating fill-resolver
+    budget_exceeded. raster_col: Feature.raster bytes per row (the
+    re-encode merge path, raster_to_feature semantics —
+    vector_tile_geometry_feature.hpp:23-34): raster-bearing rows keep
+    their geometry AND raster; rows with raster but no surviving
+    geometry are written as geometry-less raster features (type
+    UNKNOWN), like the reference's raster features."""
+    n = len(pdf)
+    if n == 0:
+        return b"", 0
     rasters = None
     if raster_col and raster_col in pdf.columns:
         rl = list(pdf[raster_col])
         if any(r is not None for r in rl):
             rasters = rl
-    geoms = (
-        [G.gunpack(bytes(b)) for b in pdf[geom_col]]
-        if geom_col
-        else G.from_wkt_batch(list(pdf[wkt_col]))
+    layers, unresolved = _encode_geom_groups(
+        pdf, np.zeros(n, dtype=np.int64), ([z], [x], [y]), layer_name, prop_cols,
+        key_names=key_names, extent=extent, buffer_px=buffer_px,
+        simplify_distance=simplify_distance, area_threshold=area_threshold,
+        version=version, fill_type=fill_type, strictly_simple=strictly_simple,
+        multi_polygon_union=multi_polygon_union,
+        process_all_rings=process_all_rings,
+        ids=pdf[id_col].to_numpy() if id_col else None,
+        rasters=rasters,
     )
-    # the WHOLE simplify/clip/assemble/encode pass runs as flat numpy
-    # over every feature at once (functions/ragged.py — the fused
-    # vectorized twin of the reference's per-feature visitor chain,
-    # src/vector_tile_processor.ipp:82-174); rare complex features
-    # (geometry collections, fill-resolver polygons) come back as ejects
-    # and go through the scalar pipeline below
-    if multi_polygon_union or process_all_rings:
-        # non-default wagyu knobs (processor.set_multi_polygon_union /
-        # set_process_all_rings): the ragged lane models the default
-        # semantics, so every feature takes the scalar pipeline
-        feat_rows = np.empty(0, dtype=np.int64)
-        gtypes_v = np.empty(0, dtype=np.int64)
-        cmds_flat = np.empty(0, dtype=np.uint64)
-        clens = np.empty(0, dtype=np.int64)
-        ejects = list(range(len(geoms)))
-    else:
-        feat_rows, gtypes_v, cmds_flat, clens, ejects = RG.encode_batch(
-            geoms, vt, clip_box, simplify_distance, area_threshold, stats,
-            force_resolve=strictly_simple,
-        )
-    if ejects:
-        s_rows: list[int] = []
-        s_gtypes: list[int] = []
-        s_cmds: list[np.ndarray] = []
-        for i in ejects:
-            for gtype, cmds in _scalar_geom_feature(
-                geoms[i], vt, clip_box, simplify_distance, area_threshold,
-                stats, fill_type=fill_type, strictly_simple=strictly_simple,
-                multi_polygon_union=multi_polygon_union,
-                process_all_rings=process_all_rings,
-            ):  # collections: one wire feature per member
-                s_rows.append(i)
-                s_gtypes.append(gtype)
-                s_cmds.append(np.asarray(cmds, dtype=np.uint64))
-        if s_rows:
-            # merge scalar features back in original feature order
-            pieces = np.split(cmds_flat, np.cumsum(clens)[:-1]) if len(clens) else []
-            rows_all = np.concatenate([feat_rows, np.asarray(s_rows, dtype=np.int64)])
-            order = np.argsort(rows_all, kind="stable")
-            all_cmds = pieces + s_cmds
-            all_gtypes = np.concatenate([gtypes_v, np.asarray(s_gtypes, dtype=np.int64)])
-            feat_rows = rows_all[order]
-            gtypes_v = all_gtypes[order]
-            cmd_list = [all_cmds[j] for j in order]
-            cmds_flat = np.concatenate(cmd_list) if cmd_list else cmds_flat
-            clens = np.array([len(c) for c in cmd_list], dtype=np.int64)
-    if len(feat_rows) == 0 and rasters is None:
-        return b"", 0
-    keep_idx = feat_rows
-    kept_tags = tags[keep_idx]
-    tmask = kept_tags >= 0
-    ragged_args = (
-        gtypes_v,
-        cmds_flat,
-        clens,
-        kept_tags[tmask].astype(np.int64),
-        tmask.sum(axis=1).astype(np.int64),
-        ids[keep_idx].astype(np.int64) if ids is not None else None,
-    )
-    if rasters is None:
-        blob = pbf.encode_features_packed_ragged(*ragged_args)
-        n_out = len(feat_rows)
-    else:
-        blob, n_out = _splice_raster_frames(
-            ragged_args, feat_rows, gtypes_v, cmds_flat, clens,
-            tags, ids, rasters,
-        )
-        if n_out == 0:
-            return b"", 0
-    vals = [pbf.encode_value(v) for v in values]
-    layer = pbf.encode_layer_packed(
-        layer_name, blob, keys, vals, extent=extent, version=version
-    )
-    return layer, n_out
+    if stats is not None and unresolved[0]:
+        stats["budget_exceeded"] = stats.get("budget_exceeded", 0) + int(unresolved[0])
+    return layers[0]
 
 
-def _splice_raster_frames(ragged_args, feat_rows, gtypes_v, cmds_flat,
-                          clens, tags, ids, rasters):
-    """Weave Feature.raster bytes into the batch-framed blob: frames of
-    raster-bearing rows are rebuilt by the scalar writer (field order
-    id, tags, type, geometry, raster — matching encode_feature and the
-    reference's raster_to_feature), raster-only rows (no surviving
-    geometry) are inserted at their original row position as
-    geometry-less UNKNOWN-type features. A collection row's raster
-    attaches to its FIRST member feature only."""
-    blob_b, flens = pbf.encode_features_packed_ragged(
-        *ragged_args, return_lengths=True
+# ---------------------------------------------------------------------------
+# point lane
+# ---------------------------------------------------------------------------
+
+def _point_tile_rows(pdf, keys, prop_cols, prefix, suffix, extent, buffer_px,
+                     compress_tiles, raster_col=None) -> list[tuple]:
+    """Every group of a sorted batch of point rows -> one tile row each.
+    Points outside the buffered tile are dropped before the dictionary
+    is built, so a group with no surviving point writes no row."""
+    px, py, ok = _quantize_batch(pdf, extent, buffer_px)
+    pdf = pdf[ok].reset_index(drop=True)
+    if len(pdf) == 0:
+        return []
+    gid, starts = _segment(pdf, keys)
+    layers = _encode_layers(
+        pdf, gid, len(starts), prop_cols,
+        _point_features(np.arange(len(pdf)), px[ok], py[ok]), prefix, suffix,
+        rasters=list(pdf[raster_col]) if raster_col else None,
     )
-    frame_off = np.concatenate([[0], np.cumsum(flens)]).astype(np.int64)
-    cmd_pieces = (
-        np.split(cmds_flat, np.cumsum(clens)[:-1]) if len(clens) else []
-    )
-    geom_rows = set(int(r) for r in feat_rows)
-    extra = [
-        i for i, r in enumerate(rasters)
-        if r is not None and i not in geom_rows
+    zs, xs, ys = (pdf[k].to_numpy()[starts] for k in TILE_KEYS)
+    return [
+        (int(z), int(x), int(y), _frame_tile(layer, compress_tiles), nf, 1, True)
+        for (layer, nf), z, x, y in zip(layers, zs, xs, ys)
     ]
-
-    def raster_frame(row: int, gtype: int, cmds) -> bytes:
-        trow = tags[row]
-        tm = trow >= 0
-        msg = pbf.encode_feature(
-            int(ids[row]) if ids is not None else None,
-            [int(t) for t in trow[tm]],
-            gtype,
-            [int(c) for c in cmds],
-            raster=bytes(rasters[row]),
-        )
-        framed = bytearray()
-        pbf.add_len_field(framed, 2, msg)  # Layer.features framing
-        return bytes(framed)
-
-    pieces: list[bytes] = []
-    gi = ei = 0
-    prev_row = -1
-    while gi < len(feat_rows) or ei < len(extra):
-        take_extra = gi >= len(feat_rows) or (
-            ei < len(extra) and extra[ei] < int(feat_rows[gi])
-        )
-        if take_extra:
-            pieces.append(raster_frame(extra[ei], 0, []))
-            ei += 1
-            continue
-        row = int(feat_rows[gi])
-        if rasters[row] is not None and row != prev_row:
-            pieces.append(raster_frame(row, int(gtypes_v[gi]), cmd_pieces[gi]))
-        else:
-            pieces.append(bytes(blob_b[frame_off[gi] : frame_off[gi + 1]]))
-        prev_row = row
-        gi += 1
-    return b"".join(pieces), len(pieces)
-
-
-def _layer_prefix_suffix(layer_name: str, prop_cols: list[str], extent: int, version: int):
-    prefix = bytearray()
-    pbf.add_len_field(prefix, 1, layer_name.encode("utf-8"))
-    for k in prop_cols:
-        pbf.add_len_field(prefix, 3, k.encode("utf-8"))
-    suffix = bytearray()
-    pbf.add_varint_field(suffix, 5, extent)
-    pbf.add_varint_field(suffix, 15, version)
-    return bytes(prefix), bytes(suffix)
 
 
 def build_point_tiles(
@@ -754,11 +677,11 @@ def build_point_tiles(
     empty hot tiles existing.
 
     Skew handling (north rule): tiles with more than ``hot_threshold``
-    rows take the *salted* two-phase path — contiguous row-number chunks
-    of a hot tile pack their feature/value blobs in parallel tasks
-    (per-occurrence dictionary slots need no cross-chunk coordination),
-    and a per-tile second phase just concatenates chunk blobs into the
-    layer. Cold tiles take the dense-dictionary single-phase kernel."""
+    rows take the *salted* two-phase path — salt buckets of a hot tile
+    pack their feature/value blobs in parallel tasks (per-occurrence
+    dictionary slots need no cross-bucket coordination), and a per-tile
+    second phase just concatenates bucket blobs into the layer. Cold
+    tiles take the dense-dictionary single-phase core."""
     from mapnik_vector_tile_spark.operators.assign import _mercator_cols
 
     mx, my = _mercator_cols("lon", "lat")
@@ -769,99 +692,31 @@ def build_point_tiles(
         slim_cols.append(order_col)
     slim = assigned.withColumn("mx", mx).withColumn("my", my).select(*slim_cols, "mx", "my")
     sort_col = order_col or id_col
-    cols = ["z", "x", "y", "tile", "n_features", "n_layers", "painted"]
+    int_props = _int_props(slim, prop_cols)
+    prefix, suffix = _layer_prefix_suffix(layer_name, prop_cols, extent, 2)
 
-    def encode_group(z: int, x: int, y: int, grp: pd.DataFrame):
-        if sort_col:  # deterministic feature order (SURVEY.md §2.5)
-            grp = grp.sort_values(sort_col, kind="mergesort").reset_index(drop=True)
-        layer, nf = _encode_group_prequantized(
-            grp, layer_name, prop_cols, extent, 2, raster_col
+    def point_kernel(keys):
+        return _batch_driver(
+            lambda pdf: _point_tile_rows(
+                pdf, keys, prop_cols, prefix, suffix, extent, buffer_px,
+                compress_tiles, raster_col,
+            ),
+            TILE_COLS, keys, int_props,
         )
-        if nf == 0:
-            return (z, x, y, b"", 0, 0, False)
-        tile = pbf.encode_tile([layer])
-        if compress_tiles:
-            tile = Z.compress(tile)
-        return (z, x, y, tile, nf, 1, True)
 
-    def process_chunk(pdf: pd.DataFrame) -> list[tuple]:
-        px, py, ok = _quantize_batch(pdf, extent, buffer_px)
-        pdf = pdf.loc[ok].reset_index(drop=True)
-        if len(pdf) == 0:
-            return []
-        pdf["_px"], pdf["_py"] = px[ok], py[ok]
-        if raster_col is None:
-            out = _encode_tiles_segmented(
-                pdf, layer_name, prop_cols, extent, 2, compress_tiles
-            )
-            if out:  # [] means nulls present -> group lane fallback
-                return out
-        out = []
-        for (gz, gx, gy), grp in pdf.groupby(["z", "x", "y"], sort=False):
-            out.append(encode_group(int(gz), int(gx), int(gy), grp))
-        return out
-
-    def kernel(iterator):
-        """Tiles straddling Arrow batches carry into the next batch
-        (list of frames, concat only at group close — no quadratic copy)."""
-        carry: list[pd.DataFrame] = []
-        carry_key = None
-
-        def keys_of(pdf, i):
-            return (pdf["z"].iloc[i], pdf["x"].iloc[i], pdf["y"].iloc[i])
-
-        for pdf in iterator:
-            if len(pdf) == 0:
-                continue
-            if carry:
-                if keys_of(pdf, 0) == carry_key:
-                    same = (
-                        (pdf["z"] == carry_key[0])
-                        & (pdf["x"] == carry_key[1])
-                        & (pdf["y"] == carry_key[2])
-                    ).to_numpy()
-                    split = int(np.argmin(same)) if not same.all() else len(pdf)
-                    carry.append(pdf.iloc[:split])
-                    if split == len(pdf):
-                        continue  # whole batch belongs to the carried group
-                    full = pd.concat(carry, ignore_index=True)
-                    carry, carry_key = [], None
-                    rows = process_chunk(full)
-                    if rows:
-                        yield pd.DataFrame(rows, columns=cols)
-                    pdf = pdf.iloc[split:].reset_index(drop=True)
-                else:
-                    full = pd.concat(carry, ignore_index=True)
-                    carry, carry_key = [], None
-                    rows = process_chunk(full)
-                    if rows:
-                        yield pd.DataFrame(rows, columns=cols)
-            lk = keys_of(pdf, len(pdf) - 1)
-            tail_mask = (
-                (pdf["z"] == lk[0]) & (pdf["x"] == lk[1]) & (pdf["y"] == lk[2])
-            ).to_numpy()
-            n_tail = int(tail_mask[::-1].argmin()) if not tail_mask.all() else len(pdf)
-            carry = [pdf.iloc[len(pdf) - n_tail :]]
-            carry_key = lk
-            body = pdf.iloc[: len(pdf) - n_tail]
-            if len(body):
-                rows = process_chunk(body)
-                if rows:
-                    yield pd.DataFrame(rows, columns=cols)
-        if carry:
-            full = pd.concat(carry, ignore_index=True)
-            rows = process_chunk(full)
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-    from pyspark.sql import Window, functions as F
+    from pyspark.sql import functions as F
 
     npart = int(slim.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if raster_col is not None or hot_threshold <= 0:
-        clustered = slim.repartition(npart, "z", "x", "y").sortWithinPartitions(
-            "z", "x", "y", *([sort_col] if sort_col else [])
+
+    def cold_tiles(df: DataFrame) -> DataFrame:
+        return (
+            df.repartition(npart, *TILE_KEYS)
+            .sortWithinPartitions(*TILE_KEYS, *([sort_col] if sort_col else []))
+            .mapInPandas(point_kernel(TILE_KEYS), schema=TILE_SCHEMA)
         )
-        return clustered.mapInPandas(kernel, schema=TILE_SCHEMA)
+
+    if raster_col is not None or hot_threshold <= 0:
+        return cold_tiles(slim)
 
     # hot/cold routing: map-side-combined counts identify skewed tiles;
     # the hot list is tiny and broadcasts. The routed projection feeds
@@ -878,102 +733,103 @@ def build_point_tiles(
     # shuffles on the bench shape). The hot list is bounded by
     # n_rows / hot_threshold, so the checkpoint is tiny.
     hot_list_df = (
-        slim.groupBy("z", "x", "y").agg(F.count("*").alias("_cnt"))
+        slim.groupBy(*TILE_KEYS).agg(F.count("*").alias("_cnt"))
         .where(F.col("_cnt") > hot_threshold)
-        .select("z", "x", "y")
+        .select(*TILE_KEYS)
         .localCheckpoint(eager=True)
     )
     if hot_list_df.isEmpty():
         # no skewed tile anywhere: the routing joins would be no-ops —
         # take the single clustered shuffle directly (the common case
         # for every query at oracle scale)
-        clustered = slim.repartition(npart, "z", "x", "y").sortWithinPartitions(
-            "z", "x", "y", *([sort_col] if sort_col else [])
-        )
-        return clustered.mapInPandas(kernel, schema=TILE_SCHEMA)
+        return cold_tiles(slim)
     hot_list = F.broadcast(hot_list_df)
-    cold = slim.join(hot_list, ["z", "x", "y"], "left_anti")
-    cold_tiles = (
-        cold.repartition(npart, "z", "x", "y")
-        .sortWithinPartitions("z", "x", "y", *([sort_col] if sort_col else []))
-        .mapInPandas(kernel, schema=TILE_SCHEMA)
-    )
-
-    hot = slim.join(hot_list, ["z", "x", "y"], "left_semi")
+    cold = cold_tiles(slim.join(hot_list, list(TILE_KEYS), "left_anti"))
+    hot = slim.join(hot_list, list(TILE_KEYS), "left_semi")
     hot_tiles = _build_hot_tiles(
-        hot, prop_cols, layer_name, extent, buffer_px, compress_tiles, npart,
-        sort_col=sort_col, prechunk=prechunk_hot,
+        hot, prop_cols, prefix, suffix, extent, buffer_px, compress_tiles,
+        npart, int_props, point_kernel, sort_col=sort_col, prechunk=prechunk_hot,
     )
-    return cold_tiles.unionByName(hot_tiles)
+    return cold.unionByName(hot_tiles)
 
 
 def _build_hot_tiles(
     hot: DataFrame,
     prop_cols: list[str],
-    layer_name: str,
+    prefix: bytes,
+    suffix: bytes,
     extent: int,
     buffer_px: int,
     compress_tiles: bool,
     npart: int,
+    int_props: list[str],
+    point_kernel,
     sort_col: str | None = None,
     salt_buckets: int = 64,
     prechunk: bool = False,
 ) -> DataFrame:
     """Salted two-phase encode for skewed tiles (north rule).
 
-    Salt = hash(sort key) % buckets, so even the per-bucket row
-    numbering (window) parallelizes — no single-task stage touches a
-    whole hot tile except the final byte concat + deflate.
+    Salt = hash(sort key) % buckets, so even the bucket packing
+    parallelizes — no single-task stage touches a whole hot tile except
+    the final byte concat.
 
-    Phase 1 (parallel over (z,x,y,salt)): pack the bucket's features
-    with per-occurrence dictionary slots (slot = global stream index =
-    (bucket offset + row-in-bucket) * ncols + col — needs no cross-
-    bucket dictionary merge; decoded properties are identical, the
-    uncompressed layer is a little larger when values repeat) plus the
-    bucket's values blob. Bucket offsets come from a tiny per-bucket
-    count table (broadcast).
+    Phase 1 (parallel over (z,x,y,salt), one batch-driver call per whole
+    bucket): pack the bucket's features with per-occurrence dictionary
+    slots (slot = bucket offset + index of the non-null property cell
+    within the bucket, row-major — needs no cross-bucket dictionary
+    merge; a null property is a dropped tag, as in the cold core;
+    decoded properties are identical, the uncompressed layer is a little
+    larger when values repeat) plus the bucket's values blob. Bucket
+    offsets come from a tiny per-bucket table of non-null cell counts
+    (broadcast).
 
     Phase 2 (per tile, #buckets rows): concatenate bucket blobs in salt
     order -> layer -> tile pbf -> zlib. Feature order = (salt, sort
     key): deterministic, though not globally sorted by the sort key.
 
     prechunk=True is the store-time pre-chunking mode: every salt
-    bucket ships as its OWN standalone single-layer tile row (local
-    per-occurrence dictionary slots need no bucket offsets), so phase 2
-    — the per-tile byte concat + single zlib stream, the only serial
-    stage of this path — disappears entirely, and the decode side never
-    sees a monolithic hot tile to split. Multiple rows per hot (z,x,y);
-    decoded feature multiset identical to the monolithic tile.
+    bucket ships as its OWN standalone single-layer tile row through the
+    cold core (its own first-seen dictionary), so phase 2 — the per-tile
+    byte concat + single zlib stream, the only serial stage of this path
+    — disappears entirely, and the decode side never sees a monolithic
+    hot tile to split. Multiple rows per hot (z,x,y); decoded feature
+    multiset identical to the monolithic tile.
     """
     from pyspark.sql import Window, functions as F
 
-    c = len(prop_cols)
-    prefix, suffix = _layer_prefix_suffix(layer_name, prop_cols, extent, 2)
+    keys = (*TILE_KEYS, "_salt")
     salt_src = sort_col if sort_col else "mx"
     hot = hot.withColumn("_salt", F.pmod(F.xxhash64(F.col(salt_src)), F.lit(salt_buckets)))
+
+    def clustered(df: DataFrame) -> DataFrame:
+        return df.repartition(npart, *keys).sortWithinPartitions(
+            *keys, *([sort_col] if sort_col else ["mx"])
+        )
+
     if prechunk:
-        # bucket-local dictionary slots: no offset table, no broadcast
-        hot = hot.withColumn("_boff", F.lit(0)).withColumn("_chunk", F.col("_salt"))
-    else:
-        # bucket offsets: one narrow map-side-combined agg + a window over
-        # the tiny per-bucket count table (broadcast back) — no window over
-        # the data itself; row numbers are assigned inside the pack kernel
-        bucket_counts = hot.groupBy("z", "x", "y", "_salt").agg(F.count("*").alias("_bcnt"))
-        woff = (
-            Window.partitionBy("z", "x", "y")
-            .orderBy("_salt")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        offsets = bucket_counts.withColumn(
-            "_boff", F.coalesce(F.sum("_bcnt").over(woff), F.lit(0))
-        ).select("z", "x", "y", "_salt", "_boff")
-        hot = hot.join(F.broadcast(offsets), ["z", "x", "y", "_salt"], "inner").withColumn(
-            "_chunk", F.col("_salt")
-        )
-    part_schema = (
-        "z int, x long, y long, chunk long, seq long, n long, "
-        "fblob binary, vblob binary"
+        return clustered(hot).mapInPandas(point_kernel(keys), schema=TILE_SCHEMA)
+
+    # bucket offsets: one narrow map-side-combined agg of the non-null
+    # property cells + a window over the tiny per-bucket table (broadcast
+    # back) — no window over the data itself
+    def present(f):
+        ok = F.col(f.name).isNotNull()
+        if f.dataType.simpleString() in ("float", "double"):
+            ok = ok & ~F.isnan(F.col(f.name))  # pandas reads NaN as null
+        return ok.cast("long")
+
+    cells = sum((present(f) for f in hot.schema if f.name in prop_cols), F.lit(0).cast("long"))
+    bucket_cells = hot.groupBy(*keys).agg(F.sum(cells).alias("_bcells"))
+    woff = Window.partitionBy(*TILE_KEYS).orderBy("_salt").rowsBetween(
+        Window.unboundedPreceding, -1
     )
+    offsets = bucket_cells.withColumn(
+        "_boff", F.coalesce(F.sum("_bcells").over(woff), F.lit(0))
+    ).select(*keys, "_boff")
+    hot = hot.join(F.broadcast(offsets), list(keys), "inner")
+    c = len(prop_cols)
+
     # r7: with compression on, phase 1 ships DEFLATED segments plus
     # (uncompressed length, adler32) per blob, and phase 2 concatenates
     # segments and combines checksums into one valid zlib stream —
@@ -981,139 +837,69 @@ def _build_hot_tiles(
     # path's only serial stage) disappears, and the per-tile exchange
     # carries compressed bytes (~3x fewer). Decoded bytes identical;
     # the stored stream differs only in block boundaries.
-    part_schema_seg = (
-        "z int, x long, y long, chunk long, seq long, n long, "
-        "fseg binary, vseg binary, fulen long, vulen long, "
-        "fadler long, vadler long"
+    if compress_tiles:
+        part_cols = ["z", "x", "y", "chunk", "n", "fseg", "vseg",
+                     "fulen", "vulen", "fadler", "vadler"]
+        part_schema = ("z int, x long, y long, chunk long, n long, fseg binary, "
+                       "vseg binary, fulen long, vulen long, fadler long, vadler long")
+    else:
+        part_cols = ["z", "x", "y", "chunk", "n", "fblob", "vblob"]
+        part_schema = "z int, x long, y long, chunk long, n long, fblob binary, vblob binary"
+
+    def pack(pdf: pd.DataFrame) -> list[tuple]:
+        gid, starts = _segment(pdf, keys)
+        n_groups = len(starts)
+        vid, vbuf, voff, vlen = _value_fields(pdf, prop_cols)
+        rows, cols = np.nonzero(vid >= 0)  # row-major non-null cells
+        # the values blob covers every (pre-mask) row, so global slot
+        # positions stay aligned across buckets when the buffer mask
+        # drops a feature
+        cell_bounds = np.searchsorted(rows, np.append(starts, len(pdf)))
+        tags = _tag_pairs(
+            len(pdf), c, rows, cols,
+            pdf["_boff"].to_numpy(np.int64)[rows]
+            + np.arange(len(rows)) - cell_bounds[gid[rows]],
+        )
+        values, val_off = pbf.ragged_gather(vbuf, voff, vlen, vid[rows, cols])
+        values = values.tobytes()
+        px, py, ok = _quantize_batch(pdf, extent, buffer_px)
+        blob, frame_off, frame_rows = _frame_features(
+            _point_features(np.flatnonzero(ok), px[ok], py[ok]), tags
+        )
+        fb = np.searchsorted(gid[frame_rows], np.arange(n_groups + 1))
+        zs, xs, ys, salts = (pdf[k].to_numpy()[starts] for k in keys)
+        out = []
+        for g in range(n_groups):
+            fblob = blob[frame_off[fb[g]] : frame_off[fb[g + 1]]]
+            vblob = values[val_off[cell_bounds[g]] : val_off[cell_bounds[g + 1]]]
+            head = (int(zs[g]), int(xs[g]), int(ys[g]), int(salts[g]), int(fb[g + 1] - fb[g]))
+            if compress_tiles:
+                lf = 6 if len(fblob) < (4 << 20) else 1
+                lv = 6 if len(vblob) < (4 << 20) else 1
+                out.append(head + (
+                    Z.deflate_segment(fblob, lf), Z.deflate_segment(vblob, lv),
+                    len(fblob), len(vblob), zlib.adler32(fblob), zlib.adler32(vblob),
+                ))
+            else:
+                out.append(head + (fblob, vblob))
+        return out
+
+    packed = clustered(hot).mapInPandas(
+        _batch_driver(pack, part_cols, keys, int_props), schema=part_schema
     )
 
-    def pack_chunk(iterator):
-        seen: dict[tuple, int] = {}  # rows already packed per bucket (batch straddle)
-        for pdf in iterator:
-            if len(pdf) == 0:
-                continue
-            out = []
-            for (gz, gx, gy, gchunk), grp in pdf.groupby(
-                ["z", "x", "y", "_chunk"], sort=False
-            ):
-                grp = grp.reset_index(drop=True)
-                gkey = (gz, gx, gy, gchunk)
-                start = seen.get(gkey, 0)
-                seen[gkey] = start + len(grp)
-                if prechunk:
-                    # each emitted piece is a self-contained mini-tile:
-                    # slots are local to THIS group (a bucket straddling
-                    # Arrow batches just ships as two mini-tiles)
-                    rn_base = np.int64(0)
-                else:
-                    rn_base = grp["_boff"].to_numpy(dtype=np.int64) + start
-                grp = grp.assign(_rn=rn_base + np.arange(len(grp)))
-                px, py, ok = _quantize_batch(grp, extent, buffer_px)
-                kept = grp.loc[ok].reset_index(drop=True)
-                rn = kept["_rn"].to_numpy(dtype=np.int64)
-                n = len(kept)
-                if n:
-                    tags = np.empty((n, 2 * c), dtype=np.int64)
-                    for j in range(c):
-                        tags[:, 2 * j] = j
-                        # slot = global stream index over ALL tile rows
-                        tags[:, 2 * j + 1] = rn * c + j
-                    zz = np.column_stack(
-                        [Cmd.zigzag32(px[ok]), Cmd.zigzag32(py[ok])]
-                    )
-                    fblob = pbf.encode_point_features_packed(tags, zz)
-                else:
-                    fblob = b""
-                # values blob covers every (pre-mask) row so global slot
-                # positions stay aligned across chunks even when the
-                # buffer mask drops a feature
-                bufs, offs, lens = [], [], []
-                bbase = 0
-                n_all = len(grp)
-                for col in prop_cols:
-                    vals = list(grp[col])
-                    try:
-                        b, o, l = pbf.encode_string_value_fields(vals)
-                    except Exception:
-                        pieces = [_value_field_bytes(v) for v in vals]
-                        b = np.frombuffer(b"".join(pieces), dtype=np.uint8)
-                        l = np.array([len(p) for p in pieces], dtype=np.int64)
-                        o = np.concatenate([[0], np.cumsum(l)[:-1]]).astype(np.int64)
-                    bufs.append(b)
-                    offs.append(o + bbase)
-                    lens.append(l)
-                    bbase += len(b)
-                vbuf = np.concatenate(bufs)
-                voff = np.concatenate(offs)
-                vlen = np.concatenate(lens)
-                order = (np.arange(n_all * c) % c) * n_all + (np.arange(n_all * c) // c)
-                gathered, _ = pbf.ragged_gather(vbuf, voff, vlen, order)
-                if prechunk:
-                    if n == 0:
-                        continue  # sibling buckets carry the tile's rows
-                    layer = prefix + gathered.tobytes() + suffix + fblob
-                    head = bytearray()
-                    pbf.write_varint(head, pbf.tag(3, pbf.WT_LEN))
-                    pbf.write_varint(head, len(layer))
-                    tile = bytes(head) + layer
-                    if compress_tiles:
-                        tile = Z.compress(tile)
-                    out.append((int(gz), int(gx), int(gy), tile, n, 1, True))
-                elif compress_tiles:
-                    vblob = gathered.tobytes()
-                    lf = 6 if len(fblob) < (4 << 20) else 1
-                    lv = 6 if len(vblob) < (4 << 20) else 1
-                    out.append(
-                        (int(gz), int(gx), int(gy), int(gchunk), start, n,
-                         Z.deflate_segment(fblob, lf),
-                         Z.deflate_segment(vblob, lv),
-                         len(fblob), len(vblob),
-                         zlib.adler32(fblob), zlib.adler32(vblob))
-                    )
-                else:
-                    out.append(
-                        (int(gz), int(gx), int(gy), int(gchunk), start, n,
-                         fblob, gathered.tobytes())
-                    )
-            if out:
-                if prechunk:
-                    cols_out = ["z", "x", "y", "tile", "n_features", "n_layers", "painted"]
-                elif compress_tiles:
-                    cols_out = ["z", "x", "y", "chunk", "seq", "n",
-                                "fseg", "vseg", "fulen", "vulen", "fadler", "vadler"]
-                else:
-                    cols_out = ["z", "x", "y", "chunk", "seq", "n", "fblob", "vblob"]
-                yield pd.DataFrame(out, columns=cols_out)
-
-    packed = (
-        hot.repartition(npart, "z", "x", "y", "_chunk")
-        .sortWithinPartitions(
-            "z", "x", "y", "_chunk", *([sort_col] if sort_col else ["mx"])
-        )
-        .mapInPandas(
-            pack_chunk,
-            schema=TILE_SCHEMA if prechunk
-            else (part_schema_seg if compress_tiles else part_schema),
-        )
-    )
-    if prechunk:
-        return packed
-
-    def assemble(key, pdf):
-        z, x, y = int(key[0]), int(key[1]), int(key[2])
-        pdf = pdf.sort_values(["chunk", "seq"], kind="mergesort")
-        values = b"".join(bytes(b) for b in pdf["vblob"])
-        feats = b"".join(bytes(b) for b in pdf["fblob"])
-        layer = prefix + values + suffix + feats
-        head = bytearray()
-        pbf.write_varint(head, pbf.tag(3, pbf.WT_LEN))
-        pbf.write_varint(head, len(layer))
-        tile = bytes(head) + layer
+    def tile_row(key, pdf, tile) -> pd.DataFrame:
         n = int(pdf["n"].sum())
         return pd.DataFrame(
-            [(z, x, y, tile, n, 1 if n else 0, bool(n))],
-            columns=["z", "x", "y", "tile", "n_features", "n_layers", "painted"],
+            [(int(key[0]), int(key[1]), int(key[2]), tile, n, 1 if n else 0, bool(n))],
+            columns=TILE_COLS,
         )
+
+    def assemble(key, pdf):
+        pdf = pdf.sort_values("chunk", kind="mergesort")
+        values = b"".join(bytes(b) for b in pdf["vblob"])
+        feats = b"".join(bytes(b) for b in pdf["fblob"])
+        return tile_row(key, pdf, _frame_tile(prefix + values + suffix + feats, False))
 
     def assemble_seg(key, pdf):
         """Concatenate pre-deflated bucket segments into one zlib
@@ -1123,16 +909,12 @@ def _build_hot_tiles(
         single-stream deflate was the salted path's only serial stage."""
         import struct
 
-        z, x, y = int(key[0]), int(key[1]), int(key[2])
-        pdf = pdf.sort_values(["chunk", "seq"], kind="mergesort")
+        pdf = pdf.sort_values("chunk", kind="mergesort")
         layer_len = (
             len(prefix) + int(pdf["vulen"].sum())
             + len(suffix) + int(pdf["fulen"].sum())
         )
-        head = bytearray()
-        pbf.write_varint(head, pbf.tag(3, pbf.WT_LEN))
-        pbf.write_varint(head, layer_len)
-        lead = bytes(head) + prefix
+        lead = _tile_head(layer_len) + prefix
         pieces = [b"\x78\x9c", Z.deflate_segment(lead)]
         ad = zlib.adler32(lead)
         for seg, adl, ulen in zip(pdf["vseg"], pdf["vadler"], pdf["vulen"]):
@@ -1145,13 +927,8 @@ def _build_hot_tiles(
             ad = Z.adler32_combine(ad, int(adl), int(ulen))
         pieces.append(Z.deflate_stream_tail())
         pieces.append(struct.pack(">I", ad))
-        tile = b"".join(pieces)
-        n = int(pdf["n"].sum())
-        return pd.DataFrame(
-            [(z, x, y, tile, n, 1 if n else 0, bool(n))],
-            columns=["z", "x", "y", "tile", "n_features", "n_layers", "painted"],
-        )
+        return tile_row(key, pdf, b"".join(pieces))
 
-    return packed.groupBy("z", "x", "y").applyInPandas(
+    return packed.groupBy(*TILE_KEYS).applyInPandas(
         assemble_seg if compress_tiles else assemble, schema=TILE_SCHEMA
     )

@@ -2,9 +2,10 @@
 pipeline (transform_geom -> simplify_geom -> clip_geom[_inside] ->
 encode_geometry): per-feature byte parity over a fuzz corpus.
 
-The scalar twin below is a faithful copy of the encode_geom_layer
+The scalar twin below is a faithful copy of the eject lane's
 per-feature loop (operators/encode.py) — the behavior the vector path
-must reproduce exactly."""
+must reproduce exactly; the vector path reads the packed geometry
+(geometry.gpack) the encoders feed it."""
 
 from __future__ import annotations
 
@@ -18,7 +19,7 @@ from mapnik_vector_tile_spark.functions import ragged as RG
 
 def scalar_pipeline(geoms, vt, clip_box, simplify_distance, area_threshold,
                     stats=None):
-    """encode_geom_layer's per-feature loop, verbatim semantics."""
+    """The scalar lane's per-feature loop, verbatim semantics."""
     transformed = G.transform_geoms_batch(geoms, vt)
     cx0, cy0, cx1, cy1 = clip_box
     out = {}
@@ -48,8 +49,9 @@ def scalar_pipeline(geoms, vt, clip_box, simplify_distance, area_threshold,
 
 def ragged_pipeline(geoms, vt, clip_box, simplify_distance, area_threshold,
                     stats=None):
-    feat_rows, gtypes, cmds, clens, ejects = RG.encode_batch(
-        geoms, vt, clip_box, simplify_distance, area_threshold, stats
+    feat_rows, gtypes, cmds, clens, ejects = RG.encode_batch_gpack(
+        [G.gpack(g) for g in geoms], vt, clip_box, simplify_distance,
+        area_threshold, stats,
     )
     out = {}
     off = 0

@@ -72,7 +72,7 @@ def test_simplified_geojson_region_golden():
         polys.append(rings)
     pdf = pd.DataFrame({"gid": ["reef"], "_gpk": [G.gpack(("multipolygon", polys))]})
     layer, nf = E.encode_geom_layer(
-        pdf, 0, 0, 0, "layer", ["gid"], geom_col="_gpk", extent=25600
+        pdf, 0, 0, 0, "layer", ["gid"], extent=25600
     )
     assert nf == 1  # is_painted / one feature, like the reference asserts
 

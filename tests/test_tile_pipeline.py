@@ -109,12 +109,16 @@ def test_tile_binary_is_zlib_and_valid_pbf(tiles):
 
 def test_value_dictionary_type_qualified():
     """int 1, bool True, float 1.0 are distinct dictionary entries
-    (vector_tile_layer.hpp:54-69)."""
-    pdf = pd.DataFrame({"a": [1, 1], "b": [True, True], "c": [1.0, 1.0]})
-    keys, values, tags = encode.build_value_dicts(pdf, ["a", "b", "c"])
-    assert keys == ["a", "b", "c"]
-    assert len(values) == 3  # not collapsed
-    assert [pbf.value_type_tag(v) for v in values] == ["int", "bool", "float"]
+    (vector_tile_layer.hpp:54-69), also inside one mixed column; an
+    equal typed value shares one entry across columns."""
+    pdf = pd.DataFrame({"a": [1, 1], "b": [True, True], "c": [1.0, 1.0],
+                        "d": pd.Series([1.0, True], dtype=object)})
+    cols = ["a", "b", "c", "d"]
+    tags, values, off = encode._value_dict(pdf, cols, np.zeros(2, np.int64), 1)
+    layer = pbf.decode_layer(pbf.encode_layer_packed("l", values[off[0] : off[1]], [], []))
+    assert len(layer["values"]) == 3  # not collapsed
+    assert [pbf.value_type_tag(v) for v in layer["values"]] == ["int", "bool", "float"]
+    assert tags.tolist() == [[0, 0, 1, 1, 2, 2, 3, 2], [0, 0, 1, 1, 2, 2, 3, 1]]
 
 
 def test_value_float_narrowing():
@@ -343,7 +347,7 @@ def test_composite_reencode_upgrades_v1_to_v2(spark):
         [(3, 1, 3, tile_v1, 1, 1, True)],
         "z int, x long, y long, tile binary, n_features long, n_layers int, painted boolean",
     )
-    upgraded = composite.merge_tiles_reencode(tiles, prop_cols=["caption"])
+    upgraded = composite.merge_tiles_reencode_geom(tiles.withColumn("source", F.lit(0)))
     row = upgraded.where(F.col("painted")).first()
     layers = pbf.decode_tile(Z.decompress(bytes(row["tile"])))
     meta = pbf.decode_layer(layers[0])
